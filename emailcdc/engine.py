@@ -2,9 +2,9 @@
 
 The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
 
-    events → [offset-range batch] → LWW dedup window → skew-aware salted
-    repartition → mapInPandas extraction (Arrow) → MERGE commit (bucketed
-    snapshot swap) → lineage/metrics rows
+    events → [offset-range batch] → LWW winners aggregate + semi-join →
+    skew-aware salted repartition → mapInArrow extraction → MOR commit
+    (delta + marks, periodic compaction fold) → lineage/metrics rows
 
 Exactly-once: ``snapshot_id == batch_id`` is monotone; a batch whose id is
 ≤ the sink's CURRENT pointer is skipped idempotently, and resume reads
@@ -15,7 +15,7 @@ orphan files; the batch reruns deterministically).
 Skew handling (north rule): hot repos are detected per batch with a cheap
 ``groupBy(repo).count()`` over the deduped winners; events of hot repos get
 a salt derived from ``offset`` so one giant repo spreads over
-``n_salts`` partitions during the (CPU-heavy) parse stage, then the salt is
+``SALTS`` partitions during the (CPU-heavy) parse stage, then the salt is
 dropped — the MERGE stays key-correct because bucketing is on (repo, path).
 
 At 10^10-event scale nothing here is driver-bound: per-batch collects are
@@ -27,7 +27,6 @@ ships its tail to the driver.
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +37,11 @@ from .sink import SnapshotParquetSink
 from .udfs import extract_envelope
 
 KEY = ["repo", "path"]
+# hot-repo salting: a repo holding more than max(HOT_REPO_MIN_EVENTS,
+# HOT_REPO_FRACTION × batch events) events is spread over SALTS partitions
+SALTS = 8
+HOT_REPO_FRACTION = 0.2
+HOT_REPO_MIN_EVENTS = 64
 
 
 @dataclass
@@ -61,11 +65,6 @@ class CdcEngine:
         error_strategy: str = "continue",
         missing_field_strategy: str = "empty",
         missing_field_substitution: str | None = None,
-        n_salts: int = 8,
-        hot_key_fraction: float = 0.2,
-        hot_key_min: int = 64,
-        extract_partitions: int | None = None,
-        broadcast_key_limit: int | None = None,
         folder_expression: str | None = None,
     ):
         from .extract import validate_missing_field_config
@@ -75,22 +74,6 @@ class CdcEngine:
         self.error_strategy = error_strategy
         self.missing_field_strategy = missing_field_strategy
         self.missing_field_substitution = missing_field_substitution
-        self.n_salts = n_salts
-        self.hot_key_fraction = hot_key_fraction
-        self.hot_key_min = hot_key_min
-        self.extract_partitions = extract_partitions
-        # past this many events per batch, the LWW semi-join and the sink's
-        # compaction folds fall back from broadcast to shuffle joins — a
-        # 10^7-key broadcast built on the driver is a scale-killer.
-        # None (default) adopts the sink's configured limit; an explicit
-        # value propagates to the sink so both stages agree (ADVICE r2:
-        # the old unconditional overwrite clobbered a caller-configured
-        # sink limit even when the engine arg was left at its default)
-        if broadcast_key_limit is None:
-            self.broadcast_key_limit = sink.broadcast_key_limit
-        else:
-            self.broadcast_key_limit = broadcast_key_limit
-            sink.broadcast_key_limit = broadcast_key_limit
         # FOLDER_IDENTIFIER (AbstractJavaMailProcessor.java:58-67): a Spark
         # SQL expression over event columns deriving the message folder
         self.folder_expression = folder_expression
@@ -145,16 +128,6 @@ class CdcEngine:
                     offset_hi: int | None = None,
                     epoch: int | None = None,
                     stream_id: str | None = None) -> BatchResult:
-        timing = os.environ.get("EMAILCDC_TIMING") == "1"
-        t_last = [time.time()]
-
-        def _mark(phase: str) -> None:
-            if timing:
-                now = time.time()
-                print(f"[timing b{batch_id}] {phase}: {now - t_last[0]:.1f}s",
-                      flush=True)
-                t_last[0] = now
-
         current = self.sink.current_snapshot_id()
         if current is not None and batch_id <= current:
             return BatchResult(batch_id, offset_lo, offset_hi, 0, 0, 0, skipped=True)
@@ -227,7 +200,8 @@ class CdcEngine:
             # (sum of per-key counts == count over the raw batch — every
             # event has exactly one key, every key one repo), so hot-repo
             # detection no longer re-scans the batch parquet (guide §2.4)
-            hot_threshold = max(self.hot_key_min, int(event_count * self.hot_key_fraction))
+            hot_threshold = max(HOT_REPO_MIN_EVENTS,
+                                int(event_count * HOT_REPO_FRACTION))
             if event_count > hot_threshold:
                 hot_repos = [
                     r["repo"]
@@ -238,22 +212,18 @@ class CdcEngine:
                 ]
             else:
                 hot_repos = []
-            _mark("stats")
 
             # LWW dedup: last event per key inside the batch wins.  Instead of
             # a window over the full rows — which shuffles the (multi-KB)
             # content column — the winning offsets come from the metadata-only
             # win_meta aggregation above and semi-join the batch on offset.
-            # Broadcast only while the key set is driver-sized: event_count
-            # bounds the winner count, so past broadcast_key_limit the
-            # semi-join runs as a shuffle join instead (VERDICT r1 — a
-            # 10^7-row broadcast at the documented 10^7-event batch size would
-            # OOM the driver).  Winner content is consumed exactly once — by
-            # the extraction pipeline — straight off the parquet scan.
-            win_offs = win_meta.select("offset")
-            win_side = (F.broadcast(win_offs)
-                        if event_count <= self.broadcast_key_limit else win_offs)
-            upserts = (batch.join(win_side, on="offset", how="leftsemi")
+            # No join hint: win_meta is cached and already counted, so its
+            # size statistic is exact and autoBroadcastJoinThreshold picks
+            # broadcast for driver-sized winner sets and a shuffle join
+            # past it.  Winner content is consumed exactly once — by the
+            # extraction pipeline — straight off the parquet scan.
+            upserts = (batch.join(win_meta.select("offset"), on="offset",
+                                  how="leftsemi")
                        .filter(F.col("op") != "D"))
             # one winning event per key → its op decides the delete mark;
             # read off the cached win_meta — no extra batch scan/semi-join
@@ -267,18 +237,16 @@ class CdcEngine:
             # enough for full parallelism — python parse cost per byte is
             # ~10× scan cost per byte).  Hot repos get an offset-derived
             # salt and an explicit repartition so one giant repo spreads
-            # over n_salts partitions (north rule's skew contract).
+            # over SALTS partitions (north rule's skew contract).
             if hot_repos:
-                n_parts = self.extract_partitions or self.spark.sparkContext.defaultParallelism
                 salted = upserts.withColumn(
                     "_salt",
                     F.when(
                         F.col("repo").isin(hot_repos),
-                        F.pmod(F.xxhash64("path", "offset"), F.lit(self.n_salts)),
+                        F.pmod(F.xxhash64("path", "offset"), F.lit(SALTS)),
                     ).otherwise(F.lit(0)),
-                ).repartition(n_parts, "repo", "_salt").drop("_salt")
-            elif self.extract_partitions:
-                salted = upserts.repartition(self.extract_partitions)
+                ).repartition(self.spark.sparkContext.defaultParallelism,
+                              "repo", "_salt").drop("_salt")
             else:
                 salted = upserts
 
@@ -313,7 +281,6 @@ class CdcEngine:
                            "calendar", "failure")])
             observed.write.mode("overwrite").parquet(stage_dir)
             type_counts = obs.get
-            _mark("extract+stage")
 
             stats = {
                 "event_count": event_count,
@@ -355,7 +322,6 @@ class CdcEngine:
                 offset_lo=offset_lo,
                 offset_hi=offset_hi,
                 upserts=upsert_tables,
-                delete_keys=None,
                 appends=({"failures": EnvelopedDir(
                               stage_dir, "failure",
                               where="record_type = 'failure'",
@@ -370,7 +336,6 @@ class CdcEngine:
                 stream_id=stream_id,
                 approx_batch_keys=event_count,
             )
-            _mark("commit")
             return BatchResult(batch_id, offset_lo, offset_hi,
                                event_count, upsert_count, delete_count,
                                hot_repos=tuple(hot_repos))

@@ -758,7 +758,7 @@ def extract_event(repo: str, path: str, offset, commit: str | None,
     out = {"messages": [], "attachments": [], "calendar_entries": [], "failures": []}
     # sha only matters for rows we actually emit — skip it for source-code
     # langs (they produce no payload rows; the snapshot sha is computed
-    # JVM-side with F.sha2 in the engine).
+    # with hashlib in udfs._extract_partition).
     sha = (sha256_hex(content)
            if content is not None and lang in ("eml", "mbox", "ics", "pst")
            else None)

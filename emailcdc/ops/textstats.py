@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 # differently engine-side vs oracle-side (ADVICE r4 #2).  findall of
 # non-whitespace runs also makes leading/trailing whitespace moot.
 _NON_WS_RUN = re.compile(r"[^ \t\n\r\f\x0b]+")
+_WS_RUN = re.compile(r"[ \t\n\r\f\x0b]+")
 
 
 def ascii_ws_tokens(text: str | None) -> list[str]:
@@ -111,7 +112,9 @@ def shingles(col, n: int = 5) -> Column:
 def shingle_array(col, n: int = 5) -> Column:
     """DISTINCT word n-gram shingles as an Arrow-batched UDF —
     value-identical to ``array_distinct(shingles(col, n))`` (first-
-    occurrence order, short texts collapse to one joined shingle), but
+    occurrence order, short texts collapse to one joined shingle, and
+    tokens follow Java ``split`` after Spark's space-only ``trim``: a
+    leading or trailing tab/newline run leaves an empty token), but
     the HOF form evaluates its lambda interpreted per shingle, which
     dominates wall time on corpus-wide shingling (the r4 lesson across
     minhash/fingerprint/hyperplane)."""
@@ -124,7 +127,7 @@ def shingle_array(col, n: int = 5) -> Column:
             if text is None:  # NULL in → NULL out, like the Catalyst form
                 out.append(None)
                 continue
-            toks = ascii_ws_tokens(text)
+            toks = _WS_RUN.split(text.strip(" "))
             if len(toks) < n:
                 out.append([" ".join(toks)])
             else:

@@ -1,9 +1,8 @@
 """SnapshotParquetSink — an Iceberg-style multi-table MOR sink emulation.
 
-No Iceberg runtime jar ships in this sandbox, so the engine implements the
-contract Iceberg v2 gives (merge-on-read upserts + snapshot isolation +
-safe schema evolution) behind a small interface a real
-``iceberg-spark-runtime`` adapter can replace (SURVEY.md §4 item 2).
+The sink implements the contract Iceberg v2 gives (merge-on-read upserts
++ snapshot isolation + safe schema evolution) over plain parquet files and
+JSON manifests, so it needs no Iceberg runtime (SURVEY.md §4 item 2).
 
 Design (merge-on-read, like Iceberg v2 position/equality deletes or Hudi
 MOR — chosen over copy-on-write because a WAL tail whose keys spread over
@@ -38,6 +37,7 @@ Tables: ``snapshot`` (live repos state), ``messages``, ``attachments``,
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -120,15 +120,11 @@ class Manifest:
 
 class SnapshotParquetSink:
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 64,
-                 compact_every: int = 8,
-                 broadcast_key_limit: int = 1_000_000):
+                 compact_every: int = 8):
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
         self.compact_every = compact_every
-        # past this many keys per batch, compaction folds join batch_keys
-        # by shuffle instead of broadcast (driver-sized broadcasts only)
-        self.broadcast_key_limit = broadcast_key_limit
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
@@ -209,8 +205,7 @@ class SnapshotParquetSink:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
-    def read_table(self, table: str, buckets: list[int] | None = None,
-                   with_seq: bool = False) -> DataFrame | None:
+    def read_table(self, table: str) -> DataFrame | None:
         """Current visible snapshot of a table (MOR merge of base+deltas)."""
         manifest = self.read_manifest()
         if manifest is None or table not in manifest.tables:
@@ -219,9 +214,7 @@ class SnapshotParquetSink:
         if rows is None:
             return None
         if table in APPEND_TABLES:
-            return rows.drop(SEQ) if SEQ in rows.columns and not with_seq else rows
-        if buckets is not None:
-            rows = rows.filter(bucket_expr(self.n_buckets).isin(buckets))
+            return rows.drop(SEQ)
         latest = self._latest_marks(manifest)
         if latest is not None:
             live = latest.filter(~F.col("is_delete")).select(
@@ -231,9 +224,7 @@ class SnapshotParquetSink:
                 .filter(F.col(SEQ) == F.col("_live_seq"))
                 .drop("_live_seq")
             )
-        if not with_seq:
-            rows = rows.drop(SEQ)
-        return rows.drop("_bucket") if "_bucket" in rows.columns else rows
+        return rows.drop(SEQ, "_bucket")
 
     # --- schema evolution ----------------------------------------------------
 
@@ -273,10 +264,8 @@ class SnapshotParquetSink:
         offset_lo: int,
         offset_hi: int,
         upserts: dict[str, DataFrame],
-        delete_keys: DataFrame | None,
-        appends: dict[str, DataFrame] | None = None,
+        appends: dict[str, EnvelopedDir] | None = None,
         stats: dict | None = None,
-        batch_keys: DataFrame | None = None,
         append_rows: dict[str, tuple[list, object]] | None = None,
         marks: DataFrame | None = None,
         epoch: int | None = None,
@@ -286,56 +275,30 @@ class SnapshotParquetSink:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
         ``upserts[table]`` rows replace ALL existing rows for their key
-        (visibility via the shared marks journal); ``delete_keys`` removes
-        keys.  Writes are pure appends; every ``compact_every`` commits the
-        sink is folded into fresh base files instead.
+        (visibility via the shared marks journal).  ``marks`` holds one row
+        ``(repo, path, _seq, is_delete)`` per touched key; the engine passes
+        its LWW winners, and without it every upserted key is marked live.
+        Writes are pure appends; every ``compact_every`` commits the sink is
+        folded into fresh base files instead.  The fold joins carry no
+        hint: Spark's autoBroadcastJoinThreshold sizes them.
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
         appends = appends or {}
         append_rows = append_rows or {}
-        # broadcast guard for the fold joins below: callers that know the
-        # batch size (the engine passes its event count, an upper bound on
-        # touched keys) disable broadcast past broadcast_key_limit
-        self._fold_broadcast_ok = (
-            approx_batch_keys is None
-            or approx_batch_keys <= self.broadcast_key_limit)
         compacting = prev is not None and prev.delta_depth + 1 >= self.compact_every
 
-        # ---- marks: one row per touched key, delete-flagged.  Callers that
-        # already hold a deduped per-key frame (the engine's LWW winners)
-        # pass `marks` directly; otherwise it is derived from
-        # upserts/delete_keys.
-        if marks is None:
-            if batch_keys is None:
-                frames = [df.select(*KEY) for df in upserts.values()]
-                if delete_keys is not None:
-                    frames.append(delete_keys.select(*KEY))
-                batch_keys = None
-                for kf in frames:
-                    batch_keys = kf if batch_keys is None else batch_keys.unionByName(kf)
-                if batch_keys is not None:
-                    batch_keys = batch_keys.distinct()
-            if batch_keys is not None:
-                if delete_keys is not None:
-                    marks = batch_keys.join(
-                        delete_keys.select(*KEY).withColumn("is_delete", F.lit(True)),
-                        on=KEY, how="left",
-                    ).select(
-                        *KEY, F.lit(batch_id).cast("long").alias(SEQ),
-                        F.coalesce("is_delete", F.lit(False)).alias("is_delete"),
-                    )
-                else:
-                    marks = batch_keys.select(
-                        *KEY, F.lit(batch_id).cast("long").alias(SEQ),
-                        F.lit(False).alias("is_delete"),
-                    )
+        if marks is None and upserts:
+            frames = [df.select(*KEY) for df in upserts.values()]
+            marks = functools.reduce(DataFrame.unionByName, frames).distinct().select(
+                *KEY, F.lit(batch_id).cast("long").alias(SEQ),
+                F.lit(False).alias("is_delete"))
 
         new_tables: dict[str, list[str]] = {}
         new_schemas: dict[str, str] = {}
         marks_list = list(prev.marks) if prev else []
         marks_dir = os.path.join(self.root, "data", "_marks", f"snap-{snapshot_id}")
-        batch_keys = marks.select(*KEY) if marks is not None else batch_keys
+        batch_keys = marks.select(*KEY) if marks is not None else None
 
         def _stamped_frame(val) -> DataFrame:
             """Upsert rows with the SEQ stamp, whatever form they arrived in."""
@@ -433,7 +396,7 @@ class SnapshotParquetSink:
                 folded = marks
                 if latest is not None:
                     keep = latest.filter(~F.col("is_delete")).join(
-                        self._maybe_broadcast(batch_keys), on=KEY, how="left_anti")
+                        batch_keys, on=KEY, how="left_anti")
                     folded = keep.unionByName(marks)
                 folded.repartition(min(self.n_buckets, 32)).write \
                     .mode("overwrite").parquet(marks_dir)
@@ -451,19 +414,14 @@ class SnapshotParquetSink:
             rows = appends.get(table)
             local = append_rows.get(table)
             out_dir = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
-            if isinstance(rows, EnvelopedDir):
-                if _has_parquet(rows.dir):
-                    entry = {"dir": rows.dir, "field": rows.field,
-                             "where": rows.where}
-                    new_tables[table] = prev_dirs + [entry]
-                    new_schemas[table] = self._merged_schema_json(
-                        prev.schemas.get(table) if prev else None,
-                        rows.schema if rows.schema is not None
-                        else self._read_dirs([entry]).schema)
-                else:
-                    new_tables[table] = prev_dirs
-                    if prev and table in prev.schemas:
-                        new_schemas[table] = prev.schemas[table]
+            if rows is not None and _has_parquet(rows.dir):
+                entry = {"dir": rows.dir, "field": rows.field,
+                         "where": rows.where}
+                new_tables[table] = prev_dirs + [entry]
+                new_schemas[table] = self._merged_schema_json(
+                    prev.schemas.get(table) if prev else None,
+                    rows.schema if rows.schema is not None
+                    else self._read_dirs([entry]).schema)
             elif local is not None and local[0]:
                 row_list, schema = local
                 os.makedirs(out_dir, exist_ok=True)
@@ -471,10 +429,6 @@ class SnapshotParquetSink:
                     os.path.join(out_dir, "part-0.parquet"), row_list, schema)
                 new_tables[table] = prev_dirs + [out_dir]
                 new_schemas[table] = schema.json()
-            elif rows is not None and not rows.isEmpty():
-                rows.write.mode("overwrite").parquet(out_dir)
-                new_tables[table] = prev_dirs + [out_dir]
-                new_schemas[table] = rows.schema.json()
             else:
                 new_tables[table] = prev_dirs
                 if prev and table in prev.schemas:
@@ -525,15 +479,8 @@ class SnapshotParquetSink:
                 .drop("_live_seq")
             )
         if batch_keys is not None:
-            rows = rows.join(self._maybe_broadcast(batch_keys),
-                             on=KEY, how="left_anti")
+            rows = rows.join(batch_keys, on=KEY, how="left_anti")
         return rows
-
-    def _maybe_broadcast(self, df: DataFrame) -> DataFrame:
-        """Broadcast only driver-sized batch-key frames (see commit())."""
-        if getattr(self, "_fold_broadcast_ok", True):
-            return F.broadcast(df)
-        return df
 
     @staticmethod
     def _write_local_parquet(path: str, rows: list[dict], spark_schema) -> None:
@@ -584,14 +531,15 @@ class SnapshotParquetSink:
         old_every = self.compact_every
         self.compact_every = 0  # force
         try:
-            empty_keys = self.spark.createDataFrame([], "repo string, path string")
+            no_marks = self.spark.createDataFrame(
+                [], f"repo string, path string, {SEQ} long, is_delete boolean")
             return self.commit(
                 batch_id=batch_id, offset_lo=prev.offset_lo,
                 offset_hi=prev.offset_hi,
                 upserts={t: self.spark.createDataFrame(
                     [], self.read_table(t).schema) for t in KEYED_TABLES
                     if prev.tables.get(t)},
-                delete_keys=None, batch_keys=empty_keys,
+                marks=no_marks,
                 stats={"compaction": True},
             )
         finally:

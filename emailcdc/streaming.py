@@ -98,24 +98,12 @@ def run_stream(engine: CdcEngine, events: DataFrame, checkpoint_dir: str,
     ``available_now=True`` (default) processes everything currently in the
     source then stops — the testable drain mode; pass
     ``processing_time='10 seconds'`` instead for a long-running tail.
-    Returns the StreamingQuery (caller awaits/stops it).
+    Returns the StreamingQuery (caller awaits/stops it).  This is the
+    one-sink case of ``run_stream_fanout``.
     """
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        sid = _checkpoint_stream_id(checkpoint_dir)
-        last = engine.last_epoch(stream_id=sid)
-        if last is not None and int(epoch_id) <= last:
-            return  # THIS checkpoint re-delivered an already-committed epoch
-        engine.apply_batch(batch_df, batch_id=engine.next_batch_id(),
-                           epoch=int(epoch_id), stream_id=sid)
-
-    writer = events.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return run_stream_fanout({"default": (engine, None)}, events,
+                             checkpoint_dir, available_now=available_now,
+                             processing_time=processing_time)
 
 
 def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
@@ -129,9 +117,9 @@ def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
     skips it.  A crash BETWEEN two sinks' commits of one epoch (A
     committed, B didn't, query died) heals on restart: Spark re-delivers
     the unfinished epoch, A's watermark skips it, B applies it.  This is
-    per-sink idempotence on top of ONE replayable source — the same
-    composition `run_stream` uses, multiplied; no cross-sink transaction
-    is needed because each sink's manifest is its own commit log.
+    per-sink idempotence on top of ONE replayable source — the
+    single-sink composition, multiplied; no cross-sink transaction is
+    needed because each sink's manifest is its own commit log.
 
     Scope: the heal window is the epochs the CHECKPOINT has not yet
     completed.  Epochs the checkpoint finished are never re-offered, so

@@ -42,9 +42,6 @@ def _parser() -> argparse.ArgumentParser:
                     help="FOLDER_IDENTIFIER: Spark SQL expression over the "
                          "event columns deriving the message folder "
                          "(default: mbox→path, eml→'')")
-    rp.add_argument("--broadcast-key-limit", type=int, default=None,
-                    help="past this many events/batch, LWW and fold joins "
-                         "use shuffle instead of broadcast")
 
     st = sub.add_parser("stream", help="tail an events dir (Structured Streaming)")
     st.add_argument("--source", required=True)
@@ -93,7 +90,6 @@ def main(argv: list[str] | None = None) -> int:
             missing_field_strategy=args.missing_field_strategy,
             missing_field_substitution=args.missing_field_substitution,
             folder_expression=args.folder_expression,
-            broadcast_key_limit=args.broadcast_key_limit,
         )
         events = spark.read.parquet(args.events)
         results = engine.replay(events, batch_size=args.batch_size)

@@ -200,13 +200,13 @@ class TestSchemaEvolution:
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long",
         )
-        sink.commit(1, 0, 0, {"snapshot": base}, None)
+        sink.commit(1, 0, 0, {"snapshot": base})
         evolved = spark.createDataFrame(
             [("r1", "p2", "c", "txt", "sha2", 1, "new")],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long, extra_col string",
         )
-        sink.commit(2, 1, 1, {"snapshot": evolved}, None)
+        sink.commit(2, 1, 1, {"snapshot": evolved})
         df = sink.read_table("snapshot")
         assert "extra_col" in df.columns
         rows = {r["path"]: r for r in df.collect()}
@@ -217,11 +217,11 @@ class TestSchemaEvolution:
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
         base = spark.createDataFrame([("r1", "p1", 1)],
                                      "repo string, path string, v long")
-        sink.commit(1, 0, 0, {"snapshot": base}, None)
+        sink.commit(1, 0, 0, {"snapshot": base})
         bad = spark.createDataFrame([("r1", "p1", "oops")],
                                     "repo string, path string, v string")
         with pytest.raises(Exception, match="unsafe schema evolution"):
-            sink.commit(2, 1, 1, {"snapshot": bad}, None)
+            sink.commit(2, 1, 1, {"snapshot": bad})
 
 
 class TestSkew:
@@ -235,7 +235,7 @@ class TestSkew:
             events.append({"offset": 200 + i, "op": "I", "ts": None,
                            "repo": f"cold/r{i}", "path": "p.txt", "lang": "txt",
                            "commit": "c", "content": "v"})
-        eng = _engine(spark, sink_dir, hot_key_min=50, hot_key_fraction=0.2)
+        eng = _engine(spark, sink_dir)
         results = eng.replay(spark.createDataFrame(events, schema=schemas.CHANGE_EVENTS),
                              batch_size=1000)
         assert results[0].hot_repos == ("hot/repo",)
@@ -264,7 +264,7 @@ class TestSkew:
             return rows
 
         monkeypatch.setattr(cls, "collect", spy)
-        eng = _engine(spark, sink_dir, hot_key_min=64, hot_key_fraction=0.2)
+        eng = _engine(spark, sink_dir)
         results = eng.replay(
             spark.createDataFrame(events, schema=schemas.CHANGE_EVENTS),
             batch_size=100_000)
@@ -328,34 +328,27 @@ class TestVacuumAndCrash:
 
 
 class TestBroadcastGuard:
-    """VERDICT r1: past broadcast_key_limit the LWW semi-join and the
-    compaction folds must fall back to shuffle joins — same results,
-    no driver-sized broadcast of a 10^7-key frame."""
+    """VERDICT r1: past spark.sql.autoBroadcastJoinThreshold the LWW
+    semi-join and the compaction folds run as shuffle joins — same
+    results, no driver-sized broadcast of a 10^7-key frame."""
 
     def test_parity_with_guard_forced(self, spark, tmp_path):
         sink = SnapshotParquetSink(spark, str(tmp_path / "sink"), n_buckets=8,
                                    compact_every=2)  # force folds mid-replay
-        eng = CdcEngine(spark, sink, broadcast_key_limit=1)
-        eng.replay(_events_df(spark), batch_size=20)
-        assert _snap_keys(eng) == set(EXPECTED)
-        # sha parity spot check (content survived the shuffle path)
-        rows = {(r["repo"], r["path"]): r["content_sha256"]
-                for r in eng.table("snapshot").collect()}
+        eng = CdcEngine(spark, sink)
+        threshold = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(threshold)
+        spark.conf.set(threshold, "-1")  # no broadcast: sort-merge joins only
+        try:
+            eng.replay(_events_df(spark), batch_size=20)
+            assert _snap_keys(eng) == set(EXPECTED)
+            # sha parity spot check (content survived the shuffle path)
+            rows = {(r["repo"], r["path"]): r["content_sha256"]
+                    for r in eng.table("snapshot").collect()}
+        finally:
+            spark.conf.set(threshold, old)
         for key, ev in EXPECTED.items():
             assert rows[key] == hashlib.sha256(ev["content"].encode()).hexdigest()
-
-    def test_guard_threads_into_sink(self, spark, tmp_path):
-        eng = _engine(spark, str(tmp_path / "sink"), broadcast_key_limit=7)
-        assert eng.sink.broadcast_key_limit == 7
-
-    def test_engine_default_adopts_sink_limit(self, spark, tmp_path):
-        """ADVICE r2: a limit configured on the sink constructor must not
-        be clobbered by the engine's default — the engine adopts it."""
-        sink = SnapshotParquetSink(spark, str(tmp_path / "sink"),
-                                   broadcast_key_limit=123)
-        eng = CdcEngine(spark, sink)
-        assert sink.broadcast_key_limit == 123
-        assert eng.broadcast_key_limit == 123
 
 
 class TestFolderExpression:

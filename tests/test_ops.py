@@ -187,6 +187,21 @@ class TestTextStats:
         assert by_id[0] == by_id[1]
         assert by_id[0] != by_id[3]
 
+    @pytest.mark.parametrize("n", [3, 5])
+    def test_shingle_array_matches_catalyst_form(self, spark, n):
+        """The Arrow UDF and the HOF form it replaces, run over the same
+        rows: Java split keeps an empty token where a tab or newline run
+        survives Spark's space-only trim."""
+        texts = ["\tfoo bar baz qux", "foo bar baz qux\n", "\n\tfoo bar",
+                 " a b a b a b ", "a\t\x0bb\fc\rd e f", "", "   ", None,
+                 "x\u00a0y z w v u"]
+        df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+        rows = df.select(
+            "id", textstats.shingle_array("t", n).alias("udf"),
+            F.array_distinct(textstats.shingles("t", n)).alias("hof")).collect()
+        for r in rows:
+            assert r["udf"] == r["hof"], texts[r["id"]]
+
     def test_bpe_ish_count(self, spark):
         df = spark.createDataFrame([(0, "don't stop, it's 42%!")], "id long, t string")
         n = df.select(textstats.bpe_ish_token_count("t").alias("n")).collect()[0]["n"]
