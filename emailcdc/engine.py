@@ -133,17 +133,17 @@ class CdcEngine:
             return BatchResult(batch_id, offset_lo, offset_hi, 0, 0, 0, skipped=True)
 
         # LWW winners metadata — ONE groupBy computes both the winning
-        # offsets (the semi-join side) and each winner's op (the delete
-        # mark): max_by(op, offset) rides the same aggregation, so the
-        # separate winner_marks scan + semi-join job the engine used to run
-        # per batch is gone outright (guide §2.4 — remove passes).  Only
-        # key + offset + 1-char op are cached; winner CONTENT still flows
-        # straight from the parquet scan into extraction exactly once.
+        # offset (the semi-join side) and the winner's op (the delete
+        # mark) as max(struct(offset, op)), so no separate winner-marks
+        # scan + semi-join job runs per batch.  Two events of a key at one
+        # offset resolve to the larger op whatever their input order.
+        # Only key + offset + 1-char op are cached; winner CONTENT still
+        # flows straight from the parquet scan into extraction exactly once.
         win_meta = (
             batch.groupBy(*KEY)
-            .agg(F.max("offset").alias("offset"),
-                 F.max_by("op", "offset").alias("op"),
+            .agg(F.max(F.struct("offset", "op")).alias("_win"),
                  F.count(F.lit(1)).alias("_n_events"))
+            .select(*KEY, "_win.offset", "_win.op", "_n_events")
             .persist()
         )
 

@@ -739,7 +739,8 @@ def extract_event(repo: str, path: str, offset, commit: str | None,
                   error_strategy: str = "continue",
                   missing_field_strategy: str = "empty",
                   missing_field_substitution: str | None = None,
-                  folder_override: str | None = None) -> dict:
+                  folder_override: str | None = None,
+                  content_sha256: str | None = None) -> dict:
     """Process one change event's content → {messages, attachments,
     calendar_entries, failures} lists of dicts (schemas.py shapes).
 
@@ -753,15 +754,15 @@ def extract_event(repo: str, path: str, offset, commit: str | None,
     over FlowFile attributes; here a Spark SQL expression over the event
     columns, evaluated JVM-side in udfs.extract_envelope); absent, the
     defaults mirror the reference flows: mbox → filename (= path), eml →
-    "".
+    "".  ``content_sha256`` is ``sha256_hex(content)`` when the caller
+    already has it (udfs._extract_partition hashes each event once for its
+    snapshot row); absent, it is computed here for the langs that emit
+    rows.
     """
     out = {"messages": [], "attachments": [], "calendar_entries": [], "failures": []}
-    # sha only matters for rows we actually emit — skip it for source-code
-    # langs (they produce no payload rows; the snapshot sha is computed
-    # with hashlib in udfs._extract_partition).
-    sha = (sha256_hex(content)
-           if content is not None and lang in ("eml", "mbox", "ics", "pst")
-           else None)
+    sha = content_sha256
+    if sha is None and content is not None and lang in ("eml", "mbox", "ics", "pst"):
+        sha = sha256_hex(content)
 
     def _fail(err: str) -> None:
         out["failures"].append(

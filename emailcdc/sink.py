@@ -16,10 +16,15 @@ the whole key space would otherwise rewrite the entire sink every batch):
   the key's latest mark and that mark is not a delete.  All keyed tables
   share the marks (an upsert replaces ALL tables' rows for the key —
   the reference reprocesses the whole file, SURVEY.md §2.1 K1).
-- **Compaction.**  When any bucket accumulates ≥ ``compact_every`` deltas,
-  the commit folds old visible rows + the new batch into fresh base files
-  and a single fresh marks file — amortized O(sink / compact_every) per
-  batch, exactly Iceberg's rewrite_data_files maintenance.
+- **Compaction is the MOR read written back.**  When the sink's delta
+  depth (commits since the last fold) reaches ``compact_every``, the
+  commit writes its delta as usual and then folds: the live marks (latest
+  mark per key, deletes dropped) become the single marks file and each
+  keyed table's VISIBLE rows — the same ``_visible`` path ``read_table``
+  uses — are rewritten, clustered on ``_bucket``, into ``base-<id>`` dirs.
+  Amortized O(sink / compact_every) per batch, exactly Iceberg's
+  rewrite_data_files maintenance.  Folded marks hold no delete marks: the
+  fold rewrote every table, so no older row of a deleted key survives.
 - **Manifests + atomic pointer flip.**  Each commit writes
   ``manifests/manifest-<snapshot_id>.json`` (snapshot_id == batch_id →
   idempotent replay) and atomically replaces ``CURRENT`` (``os.replace``).
@@ -37,6 +42,7 @@ Tables: ``snapshot`` (live repos state), ``messages``, ``attachments``,
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
@@ -56,6 +62,10 @@ SEQ = "_seq"
 def bucket_expr(n_buckets: int):
     """Iceberg-style bucket transform on the upsert key."""
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(n_buckets)).cast("int")
+
+
+def _has_parquet(d: str) -> bool:
+    return any(f.endswith(".parquet") for _, _, files in os.walk(d) for f in files)
 
 
 @dataclass
@@ -134,6 +144,9 @@ class SnapshotParquetSink:
     def _current_path(self) -> str:
         return os.path.join(self.root, "CURRENT")
 
+    def _manifest_path(self, snapshot_id: int) -> str:
+        return os.path.join(self.root, "manifests", f"manifest-{snapshot_id}.json")
+
     def current_snapshot_id(self) -> int | None:
         try:
             with open(self._current_path) as fh:
@@ -146,34 +159,33 @@ class SnapshotParquetSink:
             snapshot_id = self.current_snapshot_id()
         if snapshot_id is None:
             return None
-        path = os.path.join(self.root, "manifests", f"manifest-{snapshot_id}.json")
-        with open(path) as fh:
+        with open(self._manifest_path(snapshot_id)) as fh:
             return Manifest.from_json(fh.read())
 
-    def _flip_current(self, snapshot_id: int) -> None:
-        tmp = self._current_path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._current_path)  # atomic commit point
+    def _publish(self, manifest: Manifest) -> None:
+        """Write the manifest, then atomically flip CURRENT to it — the
+        commit point."""
+        for path, text in ((self._manifest_path(manifest.snapshot_id),
+                            manifest.to_json()),
+                           (self._current_path, str(manifest.snapshot_id))):
+            with open(path + ".tmp", "w") as fh:
+                fh.write(text)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(path + ".tmp", path)
 
     # --- reads --------------------------------------------------------------
 
-    def _marks_df(self, manifest: Manifest) -> DataFrame | None:
+    def _live_marks(self, manifest: Manifest) -> DataFrame | None:
+        """Latest mark per key, delete marks dropped:
+        (repo, path, _seq, is_delete)."""
         if not manifest.marks:
-            return None
-        return self.spark.read.parquet(*manifest.marks)
-
-    def _latest_marks(self, manifest: Manifest) -> DataFrame | None:
-        """Latest mark per key: (repo, path, _seq, is_delete)."""
-        marks = self._marks_df(manifest)
-        if marks is None:
             return None
         w = Window.partitionBy(*KEY).orderBy(F.desc(SEQ))
         return (
-            marks.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
+            self.spark.read.parquet(*manifest.marks)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & ~F.col("is_delete"))
             .drop("_rn")
         )
 
@@ -205,26 +217,30 @@ class SnapshotParquetSink:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
+    def _visible(self, manifest: Manifest, table: str,
+                 live: DataFrame | None) -> DataFrame | None:
+        """Rows of a keyed table visible at ``manifest``: those whose
+        ``_seq`` is their key's live mark (``live`` = _live_marks)."""
+        rows = self._read_dirs(manifest.tables.get(table, []))
+        if rows is None or live is None:
+            return rows
+        return (
+            rows.join(live.select(*KEY, F.col(SEQ).alias("_live_seq")),
+                      on=KEY, how="inner")
+            .filter(F.col(SEQ) == F.col("_live_seq"))
+            .drop("_live_seq")
+        )
+
     def read_table(self, table: str) -> DataFrame | None:
         """Current visible snapshot of a table (MOR merge of base+deltas)."""
         manifest = self.read_manifest()
         if manifest is None or table not in manifest.tables:
             return None
-        rows = self._read_dirs(manifest.tables[table])
-        if rows is None:
-            return None
         if table in APPEND_TABLES:
-            return rows.drop(SEQ)
-        latest = self._latest_marks(manifest)
-        if latest is not None:
-            live = latest.filter(~F.col("is_delete")).select(
-                *KEY, F.col(SEQ).alias("_live_seq"))
-            rows = (
-                rows.join(live, on=KEY, how="inner")
-                .filter(F.col(SEQ) == F.col("_live_seq"))
-                .drop("_live_seq")
-            )
-        return rows.drop(SEQ, "_bucket")
+            rows = self._read_dirs(manifest.tables[table])
+        else:
+            rows = self._visible(manifest, table, self._live_marks(manifest))
+        return None if rows is None else rows.drop(SEQ, "_bucket")
 
     # --- schema evolution ----------------------------------------------------
 
@@ -278,15 +294,13 @@ class SnapshotParquetSink:
         (visibility via the shared marks journal).  ``marks`` holds one row
         ``(repo, path, _seq, is_delete)`` per touched key; the engine passes
         its LWW winners, and without it every upserted key is marked live.
-        Writes are pure appends; every ``compact_every`` commits the sink is
-        folded into fresh base files instead.  The fold joins carry no
-        hint: Spark's autoBroadcastJoinThreshold sizes them.
+        Writes are pure appends; the commit that brings the delta depth to
+        ``compact_every`` then folds the sink into base files (``_fold``).
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
         appends = appends or {}
         append_rows = append_rows or {}
-        compacting = prev is not None and prev.delta_depth + 1 >= self.compact_every
 
         if marks is None and upserts:
             frames = [df.select(*KEY) for df in upserts.values()]
@@ -294,145 +308,63 @@ class SnapshotParquetSink:
                 *KEY, F.lit(batch_id).cast("long").alias(SEQ),
                 F.lit(False).alias("is_delete"))
 
-        new_tables: dict[str, list[str]] = {}
+        new_tables: dict[str, list] = {}
         new_schemas: dict[str, str] = {}
-        marks_list = list(prev.marks) if prev else []
-        marks_dir = os.path.join(self.root, "data", "_marks", f"snap-{snapshot_id}")
-        batch_keys = marks.select(*KEY) if marks is not None else None
 
-        def _stamped_frame(val) -> DataFrame:
-            """Upsert rows with the SEQ stamp, whatever form they arrived in."""
-            if isinstance(val, EnvelopedDir):
-                # the engine stamped SEQ when it wrote the envelope
-                return self._read_dirs([{"dir": val.dir, "field": val.field,
-                                         "where": val.where}])
-            return val.withColumn(SEQ, F.lit(batch_id).cast("long"))
+        def _out_dir(table: str) -> str:
+            return os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
 
-        def _stamped_schema(val):
-            """Schema of _stamped_frame(val) without file IO when the
-            EnvelopedDir carries its schema hint."""
-            if isinstance(val, EnvelopedDir) and val.schema is not None:
-                return val.schema
-            return _stamped_frame(val).schema
-
-        def _write_keyed(table: str, val, out_dir: str) -> None:
-            stamped = _stamped_frame(val)
-            if compacting:
-                old_visible = self._visible_before(prev, table, batch_keys)
-                if old_visible is not None:
-                    stamped = old_visible.unionByName(stamped, allowMissingColumns=True)
-            # `_bucket` is a clustered data column (NOT partitionBy: multiple
-            # delta roots with hive-style subdirs trip Spark's partition
-            # discovery).  Only COMPACTION folds repartition-cluster on it —
-            # those produce the long-lived base files whose parquet min/max
-            # stats give row-group skipping for bucket-pruned reads.  Delta
-            # commits skip the repartition: clustering a short-lived delta
-            # would shuffle the full payload (multi-KB content rows) four
-            # times per batch for files the next fold rewrites anyway.
-            stamped = stamped.withColumn("_bucket", bucket_expr(self.n_buckets))
-            if compacting:
-                stamped = stamped.repartition(min(self.n_buckets, 32), "_bucket")
-            stamped.write.mode("overwrite").parquet(out_dir)
-
-        def _has_parquet(d: str) -> bool:
-            return any(f.endswith(".parquet")
-                       for _, _, files in os.walk(d) for f in files)
-
-        # Submit the per-table writes concurrently: each is an independent
-        # Spark action reading the shared staged/cached inputs, so running
-        # them from a small thread pool overlaps job scheduling and keeps
-        # the executor busy instead of draining 4-6 jobs back-to-back.
-        # EnvelopedDir upserts on a NON-compacting commit write nothing at
-        # all — the staged dir itself is registered as the delta.
-        from concurrent.futures import ThreadPoolExecutor
-
-        futures = {}
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for table in KEYED_TABLES:
-                prev_schema = prev.schemas.get(table) if prev else None
-                val = upserts.get(table)
-                out_dir = os.path.join(self.root, "data", table,
-                                       f"snap-{snapshot_id}")
-                if val is None:
-                    continue
-                self._check_schema(prev_schema, _stamped_schema(val))
-                if isinstance(val, EnvelopedDir) and not compacting:
-                    continue  # zero-copy registration below
-                futures[table] = pool.submit(_write_keyed, table, val, out_dir)
-        for table in KEYED_TABLES:
+        # Each table's delta.  An EnvelopedDir is registered as it is
+        # (zero-copy).  An upsert DataFrame is stamped and written with
+        # `_bucket` as a data column: not partitionBy, because several delta
+        # roots with hive-style subdirs trip Spark's partition discovery,
+        # and not clustered on it, which would shuffle the multi-KB payload
+        # rows for files the next fold rewrites anyway.  Local rows become
+        # one parquet file.
+        for table in ALL_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
             prev_schema = prev.schemas.get(table) if prev else None
-            val = upserts.get(table)
-            out_dir = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
-            if val is None:
-                new_tables[table] = prev_dirs
-                if prev_schema:
-                    new_schemas[table] = prev_schema
-                continue
-            if isinstance(val, EnvelopedDir) and not compacting:
-                entry = {"dir": val.dir, "field": val.field,
-                         "where": val.where}
-                new_tables[table] = (prev_dirs + [entry]
-                                     if _has_parquet(val.dir) else prev_dirs)
-            else:
-                futures[table].result()  # surface write errors here
-                # an all-empty write leaves no parquet files — don't register
-                # a dir Spark can't infer a schema from
-                if _has_parquet(out_dir):
-                    new_tables[table] = [out_dir] if compacting else prev_dirs + [out_dir]
-                else:
-                    new_tables[table] = [] if compacting else prev_dirs
-            new_schemas[table] = self._merged_schema_json(
-                prev_schema, _stamped_schema(val))
-
-        # ---- marks write (after table data, before manifest)
-        if marks is not None:
-            if compacting:
-                # fold: latest live marks for keys NOT in this batch + this batch's.
-                # Folded marks cover the FULL live key set — at 10^9 sink keys a
-                # fixed repartition(4) would write 4 quarter-billion-row tasks;
-                # cluster on the same bucket count as the data folds instead.
-                latest = self._latest_marks(prev) if prev else None
-                folded = marks
-                if latest is not None:
-                    keep = latest.filter(~F.col("is_delete")).join(
-                        batch_keys, on=KEY, how="left_anti")
-                    folded = keep.unionByName(marks)
-                folded.repartition(min(self.n_buckets, 32)).write \
-                    .mode("overwrite").parquet(marks_dir)
-                marks_list = [marks_dir]
-            else:
-                # delta marks: one file per ~1M keys — a single partition is
-                # one straggler task (and one giant row group) at the
-                # documented 10^7-event batch size
-                n_parts = max(1, min(16, -(-(approx_batch_keys or 1) // 1_000_000)))
-                marks.repartition(n_parts).write.mode("overwrite").parquet(marks_dir)
-                marks_list = marks_list + [marks_dir]
-
-        for table in APPEND_TABLES:
-            prev_dirs = list(prev.tables.get(table, [])) if prev else []
-            rows = appends.get(table)
+            new_tables[table] = prev_dirs
+            if prev_schema:
+                new_schemas[table] = prev_schema
+            val = (upserts if table in KEYED_TABLES else appends).get(table)
             local = append_rows.get(table)
-            out_dir = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
-            if rows is not None and _has_parquet(rows.dir):
-                entry = {"dir": rows.dir, "field": rows.field,
-                         "where": rows.where}
-                new_tables[table] = prev_dirs + [entry]
-                new_schemas[table] = self._merged_schema_json(
-                    prev.schemas.get(table) if prev else None,
-                    rows.schema if rows.schema is not None
-                    else self._read_dirs([entry]).schema)
-            elif local is not None and local[0]:
+            if isinstance(val, EnvelopedDir):
+                entry, data_dir = ({"dir": val.dir, "field": val.field,
+                                    "where": val.where}, val.dir)
+                schema = (val.schema if val.schema is not None
+                          else self._read_dirs([entry]).schema)
+                self._check_schema(prev_schema, schema)
+            elif val is not None:
+                entry = data_dir = _out_dir(table)
+                stamped = val.withColumn(SEQ, F.lit(batch_id).cast("long"))
+                schema = stamped.schema
+                self._check_schema(prev_schema, schema)
+                stamped.withColumn("_bucket", bucket_expr(self.n_buckets)) \
+                    .write.mode("overwrite").parquet(data_dir)
+            elif local and local[0]:
+                entry = data_dir = _out_dir(table)
                 row_list, schema = local
-                os.makedirs(out_dir, exist_ok=True)
+                os.makedirs(data_dir, exist_ok=True)
                 self._write_local_parquet(
-                    os.path.join(out_dir, "part-0.parquet"), row_list, schema)
-                new_tables[table] = prev_dirs + [out_dir]
-                new_schemas[table] = schema.json()
+                    os.path.join(data_dir, "part-0.parquet"), row_list, schema)
             else:
-                new_tables[table] = prev_dirs
-                if prev and table in prev.schemas:
-                    new_schemas[table] = prev.schemas[table]
+                continue
+            # an all-empty write leaves no parquet files — don't register a
+            # dir Spark can't infer a schema from
+            if _has_parquet(data_dir):
+                new_tables[table] = prev_dirs + [entry]
+            new_schemas[table] = self._merged_schema_json(prev_schema, schema)
+
+        # marks (after table data, before manifest): one file per ~1M keys —
+        # a single partition is one straggler task (and one giant row
+        # group) at the documented 10^7-event batch size
+        marks_list = list(prev.marks) if prev else []
+        if marks is not None:
+            n_parts = max(1, min(16, -(-(approx_batch_keys or 1) // 1_000_000)))
+            marks.repartition(n_parts).write.mode("overwrite") \
+                .parquet(_out_dir("_marks"))
+            marks_list.append(_out_dir("_marks"))
 
         manifest = Manifest(
             snapshot_id=snapshot_id,
@@ -443,7 +375,7 @@ class SnapshotParquetSink:
             marks=marks_list,
             schemas=new_schemas,
             stats=stats or {},
-            delta_depth=0 if compacting else (prev.delta_depth + 1 if prev else 1),
+            delta_depth=prev.delta_depth + 1 if prev else 1,
             # non-streaming commits carry the watermark forward so a stream
             # can resume after interleaved batch replays / compactions
             last_epoch=epoch if epoch is not None
@@ -451,36 +383,55 @@ class SnapshotParquetSink:
             stream_id=stream_id if epoch is not None
             else (prev.stream_id if prev else None),
         )
-        mpath = os.path.join(self.root, "manifests", f"manifest-{snapshot_id}.json")
-        with open(mpath + ".tmp", "w") as fh:
-            fh.write(manifest.to_json())
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(mpath + ".tmp", mpath)
-        self._flip_current(snapshot_id)  # ← the commit point
+        if manifest.delta_depth >= self.compact_every:
+            manifest = self._fold(manifest)
+        self._publish(manifest)
         return manifest
 
-    def _visible_before(self, prev: Manifest, table: str,
-                        batch_keys: DataFrame | None) -> DataFrame | None:
-        """Visible rows of ``table`` at the previous snapshot, minus keys
-        replaced by the current batch (used by compaction folds)."""
-        rows = self._read_dirs(prev.tables.get(table, []))
-        if rows is None:
-            return None
-        if "_bucket" in rows.columns:
-            rows = rows.drop("_bucket")
-        latest = self._latest_marks(prev)
-        if latest is not None:
-            live = latest.filter(~F.col("is_delete")).select(
-                *KEY, F.col(SEQ).alias("_live_seq"))
-            rows = (
-                rows.join(live, on=KEY, how="inner")
-                .filter(F.col(SEQ) == F.col("_live_seq"))
-                .drop("_live_seq")
-            )
-        if batch_keys is not None:
-            rows = rows.join(batch_keys, on=KEY, how="left_anti")
-        return rows
+    def _fold(self, manifest: Manifest) -> Manifest:
+        """``manifest`` folded: its live marks as the one marks file and each
+        keyed table's visible rows, clustered on ``_bucket``, as one base.
+
+        Outputs go to ``base-<id>`` dirs: the fold reads this commit's own
+        ``snap-<id>`` delta.  The marks write fills the persisted live-marks
+        cache the table folds join against; the table folds are independent
+        actions, submitted together so Spark overlaps them.
+        """
+        from concurrent.futures import ThreadPoolExecutor
+
+        def _base_dir(table: str) -> str:
+            return os.path.join(self.root, "data", table,
+                                f"base-{manifest.snapshot_id}")
+
+        # folds cover the FULL live key set: a fixed small partition count
+        # would write quarter-billion-row tasks at 10^9 sink keys
+        n_parts = min(self.n_buckets, 32)
+        live = self._live_marks(manifest)
+        if live is not None:
+            live = live.persist()
+            live.repartition(n_parts).write.mode("overwrite") \
+                .parquet(_base_dir("_marks"))
+
+        def _fold_table(table: str) -> list[str]:
+            rows = self._visible(manifest, table, live)
+            if rows is None:
+                return []
+            rows.withColumn("_bucket", bucket_expr(self.n_buckets)) \
+                .repartition(n_parts, "_bucket") \
+                .write.mode("overwrite").parquet(_base_dir(table))
+            return [_base_dir(table)] if _has_parquet(_base_dir(table)) else []
+
+        try:
+            with ThreadPoolExecutor(max_workers=len(KEYED_TABLES)) as pool:
+                folded = dict(zip(KEYED_TABLES,
+                                  pool.map(_fold_table, KEYED_TABLES)))
+        finally:
+            if live is not None:
+                live.unpersist()
+        return dataclasses.replace(
+            manifest, tables={**manifest.tables, **folded},
+            marks=[_base_dir("_marks")] if live is not None else [],
+            delta_depth=0)
 
     @staticmethod
     def _write_local_parquet(path: str, rows: list[dict], spark_schema) -> None:
@@ -524,30 +475,20 @@ class SnapshotParquetSink:
     # --- maintenance ----------------------------------------------------------
 
     def compact_now(self, batch_id: int) -> Manifest:
-        """Force a fold of all deltas into fresh bases (no new data)."""
+        """Publish the fold of the current snapshot as snapshot
+        ``batch_id`` (no new data)."""
         prev = self.read_manifest()
         if prev is None:
             raise ValueError("nothing to compact")
-        old_every = self.compact_every
-        self.compact_every = 0  # force
-        try:
-            no_marks = self.spark.createDataFrame(
-                [], f"repo string, path string, {SEQ} long, is_delete boolean")
-            return self.commit(
-                batch_id=batch_id, offset_lo=prev.offset_lo,
-                offset_hi=prev.offset_hi,
-                upserts={t: self.spark.createDataFrame(
-                    [], self.read_table(t).schema) for t in KEYED_TABLES
-                    if prev.tables.get(t)},
-                marks=no_marks,
-                stats={"compaction": True},
-            )
-        finally:
-            self.compact_every = old_every
+        manifest = self._fold(dataclasses.replace(
+            prev, snapshot_id=batch_id, batch_id=batch_id,
+            stats={"compaction": True}))
+        self._publish(manifest)
+        return manifest
 
     @staticmethod
     def _dir_commit_id(name: str) -> int | None:
-        """Trailing commit id of a data dir name (``snap-N``/``batch-N``)."""
+        """Trailing commit id of a data dir name (``snap-N``/``base-N``/``batch-N``)."""
         tail = name.rsplit("-", 1)[-1]
         return int(tail) if tail.isdigit() else None
 

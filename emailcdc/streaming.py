@@ -2,9 +2,7 @@
 ``readStream`` and drive the CDC engine through ``foreachBatch``.
 
 The binlog/WAL analog (SURVEY.md §2.1 S1/S2): NiFi's FlowFile queue
-becomes a streaming file source over the events directory (a Kafka source
-drops in by swapping ``readStream`` options — the ``foreachBatch`` body is
-source-agnostic).
+becomes a streaming file source over the events directory.
 
 Exactly-once composition: Spark's streaming checkpoint gives *replayable*
 micro-batches with stable ``epoch_id``s; the sink manifest records the
@@ -55,39 +53,6 @@ def stream_events(spark: SparkSession, source_dir: str,
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(source_dir)
-
-
-def stream_events_kafka(spark: SparkSession, bootstrap_servers: str,
-                        topic: str, *,
-                        starting_offsets: str = "earliest",
-                        max_offsets_per_trigger: int | None = None) -> DataFrame:
-    """readStream over a Kafka topic carrying JSON-encoded change events
-    (CHANGE_EVENTS schema in the message value).
-
-    Drop-in alternative to the file source: the ``foreachBatch`` body in
-    ``run_stream`` is source-agnostic, so swapping sources changes nothing
-    downstream.  Requires the ``spark-sql-kafka`` package on the classpath
-    (not shipped in this sandbox — constructing the reader without it
-    fails at ``load()`` with Spark's standard missing-source error).
-    ``maxOffsetsPerTrigger`` is the Kafka analog of the file source's
-    ``maxFilesPerTrigger`` micro-batching (FLOWFILE_COUNT,
-    ExtractEMLFile.java:34-42)."""
-    from pyspark.sql import functions as F
-
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger",
-                               str(max_offsets_per_trigger))
-    raw = reader.load()
-    return raw.select(
-        F.from_json(F.col("value").cast("string"),
-                    schemas.CHANGE_EVENTS).alias("e")
-    ).select("e.*")
 
 
 def run_stream(engine: CdcEngine, events: DataFrame, checkpoint_dir: str,

@@ -26,7 +26,6 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -35,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
 from . import schemas
-from .extract import extract_event
+from .extract import extract_event, sha256_hex
 
 ENVELOPE = StructType(
     [
@@ -83,18 +82,18 @@ def _extract_partition(
             col["offset"], col["repo"], col["path"], col["commit"],
             col["lang"], col["content"], folders
         ):
+            sha = sha256_hex(content) if content is not None else None
             result = extract_event(
                 repo, path, int(offset), commit, lang, content,
                 error_strategy=error_strategy,
                 missing_field_strategy=missing_field_strategy,
                 missing_field_substitution=missing_field_substitution,
                 folder_override=folder,
+                content_sha256=sha,
             )
             result["snapshot"] = [{
                 "repo": repo, "path": path, "commit": commit, "lang": lang,
-                "content_sha256": (hashlib.sha256(content.encode()).hexdigest()
-                                   if content is not None else None),
-                "last_offset": int(offset),
+                "content_sha256": sha, "last_offset": int(offset),
             }]
             for kind, key in (("message", "messages"),
                               ("attachment", "attachments"),

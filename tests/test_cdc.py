@@ -100,6 +100,23 @@ class TestReplay:
         rows = eng.table("snapshot").collect()
         assert len(rows) == 1 and rows[0]["commit"] == "c2"
 
+    def test_offset_tie_winner_is_order_independent(self, spark, tmp_path):
+        """Two events of one key at one offset resolve to the same winning
+        op whatever order the batch holds them in."""
+        key = {"repo": "r1", "path": "p1", "lang": "txt"}
+        tied = [
+            {"offset": 0, "op": "U", "ts": None, **key, "commit": "c0", "content": "v0"},
+            {"offset": 0, "op": "D", "ts": None, **key, "commit": None, "content": None},
+        ]
+        seen = []
+        for i, order in enumerate((tied, tied[::-1])):
+            eng = _engine(spark, str(tmp_path / f"sink{i}"))
+            batch = spark.createDataFrame(order, schema=schemas.CHANGE_EVENTS)
+            eng.apply_batch(batch.coalesce(1), batch_id=1, offset_lo=0, offset_hi=0)
+            marks = spark.read.parquet(*eng.sink.read_manifest().marks)
+            seen.append([r["is_delete"] for r in marks.collect()])
+        assert seen[0] == seen[1] == [False]
+
     def test_update_replaces_message_rows(self, spark, sink_dir):
         key = {"repo": "r1", "path": "a.eml", "lang": "eml"}
         events = [

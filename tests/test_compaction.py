@@ -1,11 +1,11 @@
 """MOR compaction tests: the fold path must preserve exact state."""
 
-import os
+import json
 
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
-from emailcdc.sink import SnapshotParquetSink
+from emailcdc.sink import KEYED_TABLES, SnapshotParquetSink
 
 EVENTS = make_change_events(30)
 EXPECTED = expected_final_state(EVENTS)
@@ -77,3 +77,78 @@ class TestCompaction:
                    batch_size=1)
         rows = _snap(eng)
         assert set(rows) == {("r2", "q.txt")}
+
+
+def _fold_log(batch_size):
+    """A generated log (inserts, updates, deletes) plus a tail whose last
+    batch is a folding batch under ``compact_every=2``: it reinserts a key
+    the batch before deleted, and deletes then reinserts another key."""
+    from emailcdc.fixtures import make_eml, make_mbox
+    events = make_change_events(16, seed=11, delete_fraction=0.3)
+    mbox_key = next(k for k in expected_final_state(events)
+                    if k[1].endswith(".mbox"))
+
+    def ev(offset, op, repo, path, lang, content):
+        return {"offset": offset, "op": op, "ts": None, "repo": repo,
+                "path": path, "lang": lang,
+                "commit": None if op == "D" else f"t{offset}",
+                "content": None if op == "D" else content}
+
+    lo = -(-len(events) // batch_size) * batch_size  # the delete batch
+    assert len(events) <= lo - 2 and (lo // batch_size + 1) % 2 == 1
+    events += [ev(lo - 2, "I", "tail", "a.eml", "eml", make_eml(900)),
+               ev(lo - 1, "I", "tail", "bad.pst", "pst", "%%%"),
+               ev(lo, "D", "tail", "a.eml", "eml", None),
+               ev(lo + 1, "I", "tail", "b.eml", "eml", make_eml(901))]
+    lo += batch_size  # the folding batch
+    events += [ev(lo, "I", "tail", "a.eml", "eml", make_eml(902)),
+               ev(lo + 1, "D", *mbox_key, "mbox", None),
+               ev(lo + 2, "I", *mbox_key, "mbox", make_mbox(2, start_seq=903)),
+               ev(lo + 3, "U", "tail", "b.eml", "eml", make_eml(904)),
+               ev(lo + 4, "I", "tail", "bad2.pst", "pst", "%%%")]
+    return events
+
+
+def _tables(sink):
+    """Each keyed table and ``failures`` as a sorted list of row JSON."""
+    return {t: sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
+                                 default=repr)
+                      for r in sink.read_table(t).collect())
+            for t in KEYED_TABLES + ("failures",)}
+
+
+def _assert_folded_marks(spark, sink):
+    manifest = sink.read_manifest()
+    assert manifest.delta_depth == 0
+    assert len(manifest.marks) == 1
+    marks = spark.read.parquet(manifest.marks[0])
+    assert marks.count() == marks.select("repo", "path").distinct().count()
+    assert marks.filter("is_delete").count() == 0
+
+
+class TestFoldDifferential:
+    """Folding must not change what a read sees: the same log through a
+    sink that folds every second batch and one that never folds reads
+    back the same rows, and so does a forced fold of either."""
+
+    def test_fold_matches_unfolded(self, spark, tmp_path):
+        batch_size = 8
+        events = spark.createDataFrame(_fold_log(batch_size),
+                                       schema=schemas.CHANGE_EVENTS)
+        sinks = {}
+        for every in (2, 1000):
+            sinks[every] = SnapshotParquetSink(
+                spark, str(tmp_path / f"every{every}"), n_buckets=4,
+                compact_every=every)
+            CdcEngine(spark, sinks[every]).replay(events, batch_size=batch_size)
+        folded, unfolded = _tables(sinks[2]), _tables(sinks[1000])
+        assert folded == unfolded
+        assert folded["failures"] and folded["calendar_entries"]
+        assert '"path": "a.eml"' in "".join(folded["snapshot"])
+        _assert_folded_marks(spark, sinks[2])
+        assert sinks[1000].read_manifest().delta_depth > 1
+
+        for sink in sinks.values():
+            sink.compact_now(sink.current_snapshot_id() + 1)
+            _assert_folded_marks(spark, sink)
+            assert _tables(sink) == unfolded
