@@ -27,14 +27,16 @@ ships its tail to the driver.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
-from .sink import SnapshotParquetSink
-from .udfs import extract_envelope
+from .extract import validate_missing_field_config
+from .sink import EnvelopedDir, SnapshotParquetSink
+from .udfs import ENVELOPE_TABLES, extract_envelope
 
 KEY = ["repo", "path"]
 # hot-repo salting: a repo holding more than max(HOT_REPO_MIN_EVENTS,
@@ -67,7 +69,6 @@ class CdcEngine:
         missing_field_substitution: str | None = None,
         folder_expression: str | None = None,
     ):
-        from .extract import validate_missing_field_config
         validate_missing_field_config(missing_field_strategy, missing_field_substitution)
         self.spark = spark
         self.sink = sink
@@ -155,7 +156,6 @@ class CdcEngine:
             # and the winners materialization are independent jobs over the
             # same scan — submit them concurrently (guide §2.6) so the second
             # back-fills executors the first leaves idle.
-            from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=2) as pool:
                 stats_fut = pool.submit(
                     lambda: batch.groupBy(
@@ -251,13 +251,12 @@ class CdcEngine:
                 salted = upserts
 
             # --- extraction (the payload) ---------------------------------------
-            # The envelope is parsed ONCE and written to parquet partitioned
-            # by record_type — and that write IS the delta commit for the
-            # three payload tables: the sink registers each record_type
-            # subdir directly (EnvelopedDir), so the multi-KB payload hits
-            # disk exactly once per batch (the old flow re-read and
-            # re-wrote it per table).  A crashed commit leaves only an
-            # orphan envelope dir; vacuum() removes it.
+            # The envelope is parsed ONCE and written to parquet — and that
+            # write IS the delta commit for every envelope table: the sink
+            # registers the dir directly as each table's delta
+            # (EnvelopedDir), so the multi-KB payload hits disk exactly once
+            # per batch.  A crashed commit leaves only an orphan envelope
+            # dir; vacuum() removes it.
             envelope = extract_envelope(
                 salted, self.error_strategy,
                 self.missing_field_strategy, self.missing_field_substitution,
@@ -268,17 +267,15 @@ class CdcEngine:
             # FLAT write — record_type stays a data column.  partitionBy
             # forced a per-task sort of the multi-KB envelope rows plus up
             # to 5× the files (measured +0.7 s per 500k-event batch warm,
-            # 128 vs 32 files); per-type reads instead prune via the
+            # 128 vs 32 files); per-table reads instead prune via the
             # record_type column + parquet column pruning (a messages read
-            # decodes only the message struct — other types' bytes are
-            # never touched).  Per-type presence rides the SAME write
+            # decodes only the messages struct — other tables' bytes are
+            # never touched).  Per-table row counts ride the SAME write
             # action as an Observation (no extra job).
-            from pyspark.sql import Observation
             obs = Observation()
             observed = envelope.observe(obs, *[
-                F.count(F.when(F.col("record_type") == rt, 1)).alias(rt)
-                for rt in ("snapshot", "message", "attachment",
-                           "calendar", "failure")])
+                F.count(F.when(F.col("record_type") == t, 1)).alias(t)
+                for t in ENVELOPE_TABLES])
             observed.write.mode("overwrite").parquet(stage_dir)
             type_counts = obs.get
 
@@ -287,47 +284,22 @@ class CdcEngine:
                 "upsert_count": upsert_count,
                 "delete_count": delete_count,
                 "hot_repos": hot_repos,
+                "type_counts": type_counts,
             }
-            # tables whose record type never appeared in this batch have no
-            # envelope partition — skip them entirely; the rest register
-            # their envelope subdir as the delta (zero-copy).  The snapshot
+            # a table with no rows in this batch gets no delta; the rest
+            # register the envelope dir (zero-copy).  The snapshot
             # MERGE-target rows ride the envelope too (one per upsert,
             # sha256 computed in the extract worker), so no table write
-            # happens at commit time on the non-compacting path at all.
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            from .sink import EnvelopedDir
-            from .udfs import ENVELOPE
-
-            def _env_schema(record_type: str) -> StructType:
-                # unwrapped table schema (struct fields + _seq) — known
-                # statically, so commit's schema checks need no file IO
-                struct = next(f.dataType for f in ENVELOPE.fields
-                              if f.name == record_type)
-                return StructType(list(struct.fields)
-                                  + [StructField("_seq", LongType(), False)])
-
-            upsert_tables: dict = {}
-            for record_type, table in (("snapshot", "snapshot"),
-                                       ("message", "messages"),
-                                       ("attachment", "attachments"),
-                                       ("calendar", "calendar_entries")):
-                if type_counts.get(record_type, 0) > 0:
-                    upsert_tables[table] = EnvelopedDir(
-                        stage_dir, record_type,
-                        where=f"record_type = '{record_type}'",
-                        schema=_env_schema(record_type))
+            # happens at commit time on the non-folding path at all.
+            tables: dict = {t: EnvelopedDir(stage_dir, schema)
+                            for t, schema in ENVELOPE_TABLES.items()
+                            if type_counts[t] > 0}
+            tables["lineage"] = (lineage_rows, schemas.LINEAGE)
             self.sink.commit(
                 batch_id=batch_id,
                 offset_lo=offset_lo,
                 offset_hi=offset_hi,
-                upserts=upsert_tables,
-                appends=({"failures": EnvelopedDir(
-                              stage_dir, "failure",
-                              where="record_type = 'failure'",
-                              schema=_env_schema("failure"))}
-                         if type_counts.get("failure", 0) > 0 else {}),
-                append_rows={"lineage": (lineage_rows, schemas.LINEAGE)},
+                tables=tables,
                 stats=stats,
                 # winner marks are already one-row-per-key, derived from a
                 # content-pruned scan (no extra distinct/join jobs)
@@ -377,18 +349,6 @@ class CdcEngine:
     def table(self, name: str) -> DataFrame:
         df = self.sink.read_table(name)
         if df is None:
-            schema = {
-                "snapshot": "repo string, path string, commit string, lang string,"
-                            " content_sha256 string, last_offset long",
-            }.get(name)
-            if schema:
-                return self.spark.createDataFrame([], schema)
-            mapping = {
-                "messages": schemas.MESSAGES,
-                "attachments": schemas.ATTACHMENTS,
-                "calendar_entries": schemas.CALENDAR_ENTRIES,
-                "failures": schemas.FAILURES,
-                "lineage": schemas.LINEAGE,
-            }
-            return self.spark.createDataFrame([], mapping[name])
+            schema = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}[name]
+            return self.spark.createDataFrame([], schema)
         return df.drop("_bucket") if "_bucket" in df.columns else df

@@ -152,7 +152,7 @@ ATTACHMENTS = StructType(
 )
 
 # Live-state MERGE target (one row per key): carried in the extraction
-# envelope (record_type=snapshot) so the commit registers it zero-copy
+# envelope (its `snapshot` table) so the commit registers it zero-copy
 # like the payload tables — content never leaves the extract stage.
 SNAPSHOT = StructType(
     [

@@ -10,7 +10,7 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "emailcdc", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', _usable_cpus())}]"
     builder = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -49,11 +49,16 @@ def get_spark(app: str = "emailcdc", master: str | None = None,
     return builder.getOrCreate()
 
 
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's)."""
+    return len(os.sched_getaffinity(0))
+
+
 def _default_parallelism(master: str) -> int:
     if master.startswith("local["):
         inner = master[6:-1]
         if inner == "*":
-            return os.cpu_count() or 8
+            return _usable_cpus()
         try:
             return int(inner)
         except ValueError:

@@ -51,6 +51,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 KEY = ["repo", "path"]
 KEYED_TABLES = ("snapshot", "messages", "attachments", "calendar_entries")
@@ -70,27 +71,16 @@ def _has_parquet(d: str) -> bool:
 
 @dataclass
 class EnvelopedDir:
-    """An upsert handed to ``commit`` as data ALREADY ON DISK: a parquet
-    dir whose rows hold the table's columns inside the struct column
-    ``field`` (plus a top-level ``_seq``).  The engine's extraction stage
-    writes the envelope once (flat — record_type is a data column) and
-    registers the SAME dir once per table with a per-type row filter —
-    the commit then writes NOTHING for these tables (zero-copy delta
-    registration; the old path re-read and re-wrote the full multi-KB
-    payload once per table per batch).  ``where`` is a Spark SQL
-    predicate applied before unwrapping ``field`` (None = every row,
-    the pre-flat layout where the dir was a record_type= subdir):
-    reads prune to the table's own struct column + record_type via
-    parquet column pruning, so the other types' payload bytes are
-    never decoded."""
+    """A table's delta handed to ``commit`` as data ALREADY ON DISK: the
+    engine's flat envelope dir (udfs.ENVELOPE plus a top-level ``_seq``).
+    The commit registers it as the manifest entry ``{"dir": d, "table":
+    t}`` and writes nothing for the table (zero-copy delta).  Reads keep
+    the rows whose ``record_type`` is the table and unwrap its struct
+    column, so parquet column pruning never decodes the other tables'
+    payload bytes.  ``schema`` is the table's row schema, known
+    statically, so commit-time schema checks need no file IO."""
     dir: str
-    field: str
-    where: str | None = None
-    # optional schema hint for the UNWRAPPED rows (table columns + _seq):
-    # commit-time schema checks/merges then need NO file IO — without it
-    # every check triggers a mergeSchema footer read of the stage dir
-    # (~0.1-0.2 s each, 8 reads per commit measured)
-    schema: "StructType | None" = None
+    schema: StructType
 
 
 @dataclass
@@ -192,9 +182,9 @@ class SnapshotParquetSink:
     def _read_dirs(self, entries: list) -> DataFrame | None:
         """Union a table's registered data dirs.  Each entry is either a
         plain dir path (rows hold the table columns directly) or an
-        enveloped entry ``{"dir": d, "field": f[, "where": p]}`` (rows
-        hold them inside struct ``f``; ``_seq`` is top-level; ``p`` is a
-        row predicate for flat envelope dirs) — see EnvelopedDir."""
+        envelope entry ``{"dir": d, "table": t}`` (rows of record type
+        ``t`` hold them inside struct ``t``; ``_seq`` is top-level) — see
+        EnvelopedDir."""
         if not entries:
             return None
         plain = [e for e in entries if isinstance(e, str)]
@@ -203,15 +193,12 @@ class SnapshotParquetSink:
         if plain:
             frames.append(self.spark.read.option("mergeSchema", "true")
                           .parquet(*plain))
-        # enveloped dirs sharing a (field, where) can be read in one pass
-        by_field: dict[tuple, list[str]] = {}
-        for e in env:
-            by_field.setdefault((e["field"], e.get("where")), []).append(e["dir"])
-        for (field, where), dirs in by_field.items():
-            f = self.spark.read.option("mergeSchema", "true").parquet(*dirs)
-            if where:
-                f = f.filter(where)
-            frames.append(f.select(f"{field}.*", SEQ))
+        # one read per table covers all of its envelope dirs
+        for table in dict.fromkeys(e["table"] for e in env):
+            f = self.spark.read.option("mergeSchema", "true").parquet(
+                *[e["dir"] for e in env if e["table"] == table])
+            frames.append(f.filter(F.col("record_type") == table)
+                          .select(f"{table}.*", SEQ))
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
@@ -251,7 +238,6 @@ class SnapshotParquetSink:
         old rows read as null)."""
         if not prev_schema_json:
             return
-        from pyspark.sql.types import StructType
         prev = StructType.fromJson(json.loads(prev_schema_json))
         prev_types = {f.name: f.dataType.simpleString() for f in prev.fields}
         for f in new_schema.fields:
@@ -265,7 +251,6 @@ class SnapshotParquetSink:
     def _merged_schema_json(prev_schema_json: str | None, new_schema) -> str:
         if not prev_schema_json:
             return new_schema.json()
-        from pyspark.sql.types import StructType
         prev = StructType.fromJson(json.loads(prev_schema_json))
         names = {f.name for f in prev.fields}
         merged = StructType(list(prev.fields) +
@@ -279,10 +264,8 @@ class SnapshotParquetSink:
         batch_id: int,
         offset_lo: int,
         offset_hi: int,
-        upserts: dict[str, DataFrame],
-        appends: dict[str, EnvelopedDir] | None = None,
+        tables: dict,
         stats: dict | None = None,
-        append_rows: dict[str, tuple[list, object]] | None = None,
         marks: DataFrame | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
@@ -290,20 +273,22 @@ class SnapshotParquetSink:
     ) -> Manifest:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
-        ``upserts[table]`` rows replace ALL existing rows for their key
-        (visibility via the shared marks journal).  ``marks`` holds one row
-        ``(repo, path, _seq, is_delete)`` per touched key; the engine passes
-        its LWW winners, and without it every upserted key is marked live.
-        Writes are pure appends; the commit that brings the delta depth to
-        ``compact_every`` then folds the sink into base files (``_fold``).
+        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir, a DataFrame
+        or local ``(rows, schema)``.  Rows of a keyed table replace ALL
+        existing rows for their key (visibility via the shared marks
+        journal); rows of an append table add to it.  ``marks`` holds one
+        row ``(repo, path, _seq, is_delete)`` per touched key; the engine
+        passes its LWW winners, and without it every key of a keyed
+        DataFrame is marked live.  Writes are pure appends; the commit that
+        brings the delta depth to ``compact_every`` then folds the sink
+        into base files (``_fold``).
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
-        appends = appends or {}
-        append_rows = append_rows or {}
 
-        if marks is None and upserts:
-            frames = [df.select(*KEY) for df in upserts.values()]
+        keyed = [v for t, v in tables.items() if t in KEYED_TABLES]
+        if marks is None and keyed:
+            frames = [df.select(*KEY) for df in keyed]
             marks = functools.reduce(DataFrame.unionByName, frames).distinct().select(
                 *KEY, F.lit(batch_id).cast("long").alias(SEQ),
                 F.lit(False).alias("is_delete"))
@@ -315,41 +300,39 @@ class SnapshotParquetSink:
             return os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
 
         # Each table's delta.  An EnvelopedDir is registered as it is
-        # (zero-copy).  An upsert DataFrame is stamped and written with
-        # `_bucket` as a data column: not partitionBy, because several delta
-        # roots with hive-style subdirs trip Spark's partition discovery,
-        # and not clustered on it, which would shuffle the multi-KB payload
-        # rows for files the next fold rewrites anyway.  Local rows become
-        # one parquet file.
+        # (zero-copy).  A DataFrame is stamped and written with `_bucket`
+        # as a data column: not partitionBy, because several delta roots
+        # with hive-style subdirs trip Spark's partition discovery, and not
+        # clustered on it, which would shuffle the multi-KB payload rows
+        # for files the next fold rewrites anyway.  Local rows become one
+        # parquet file.
         for table in ALL_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
             prev_schema = prev.schemas.get(table) if prev else None
             new_tables[table] = prev_dirs
             if prev_schema:
                 new_schemas[table] = prev_schema
-            val = (upserts if table in KEYED_TABLES else appends).get(table)
-            local = append_rows.get(table)
+            val = tables.get(table)
+            if val is None or (isinstance(val, tuple) and not val[0]):
+                continue
             if isinstance(val, EnvelopedDir):
-                entry, data_dir = ({"dir": val.dir, "field": val.field,
-                                    "where": val.where}, val.dir)
-                schema = (val.schema if val.schema is not None
-                          else self._read_dirs([entry]).schema)
+                entry, data_dir = {"dir": val.dir, "table": table}, val.dir
+                schema = StructType(val.schema.fields
+                                    + [StructField(SEQ, LongType(), False)])
                 self._check_schema(prev_schema, schema)
-            elif val is not None:
+            elif isinstance(val, tuple):
+                entry = data_dir = _out_dir(table)
+                row_list, schema = val
+                os.makedirs(data_dir, exist_ok=True)
+                self._write_local_parquet(
+                    os.path.join(data_dir, "part-0.parquet"), row_list, schema)
+            else:
                 entry = data_dir = _out_dir(table)
                 stamped = val.withColumn(SEQ, F.lit(batch_id).cast("long"))
                 schema = stamped.schema
                 self._check_schema(prev_schema, schema)
                 stamped.withColumn("_bucket", bucket_expr(self.n_buckets)) \
                     .write.mode("overwrite").parquet(data_dir)
-            elif local and local[0]:
-                entry = data_dir = _out_dir(table)
-                row_list, schema = local
-                os.makedirs(data_dir, exist_ok=True)
-                self._write_local_parquet(
-                    os.path.join(data_dir, "part-0.parquet"), row_list, schema)
-            else:
-                continue
             # an all-empty write leaves no parquet files — don't register a
             # dir Spark can't infer a schema from
             if _has_parquet(data_dir):
@@ -516,7 +499,7 @@ class SnapshotParquetSink:
                 live.add(os.path.normpath(d))
         removed = 0
         data_root = os.path.join(self.root, "data")
-        for table in list(ALL_TABLES) + ["_marks"]:
+        for table in list(ALL_TABLES) + ["_marks", "_envelope"]:
             tdir = os.path.join(data_root, table)
             if not os.path.isdir(tdir):
                 continue
@@ -527,22 +510,5 @@ class SnapshotParquetSink:
                     continue  # in-flight commit
                 if os.path.normpath(sdir) not in live:
                     shutil.rmtree(sdir, ignore_errors=True)
-                    removed += 1
-        # enveloped staging: a batch dir is live while the manifest
-        # references it directly (flat layout) or ANY of its record_type=
-        # subdirs (pre-flat layout)
-        env_root = os.path.join(data_root, "_envelope")
-        if os.path.isdir(env_root):
-            for batch in os.listdir(env_root):
-                bdir = os.path.join(env_root, batch)
-                cid = self._dir_commit_id(batch)
-                if cid is not None and cid > current:
-                    continue  # in-flight batch
-                if os.path.normpath(bdir) in live:
-                    continue
-                subs = [os.path.normpath(os.path.join(bdir, s))
-                        for s in os.listdir(bdir)] if os.path.isdir(bdir) else []
-                if not any(s in live for s in subs):
-                    shutil.rmtree(bdir, ignore_errors=True)
                     removed += 1
         return removed

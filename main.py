@@ -15,6 +15,7 @@ Subcommands:
              sink's checkpoint automatically)
     stream   tail an events directory with Structured Streaming
     compact  force-fold the sink's MOR deltas into fresh base files
+    vacuum   remove data dirs the current manifest does not reference
     show     print a table's current snapshot row count + sample
 """
 

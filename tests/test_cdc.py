@@ -15,6 +15,7 @@ from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import make_change_events, make_eml, expected_final_state
 from emailcdc.sink import SnapshotParquetSink
+from emailcdc.udfs import ENVELOPE_TABLES
 
 
 EVENTS = make_change_events(30)
@@ -193,6 +194,9 @@ class TestReplay:
         manifest = eng.sink.read_manifest()
         assert manifest.stats["event_count"] == len(EVENTS)
         assert manifest.offset_lo == 0
+        type_counts = manifest.stats["type_counts"]
+        assert set(type_counts) == set(ENVELOPE_TABLES)
+        assert type_counts["snapshot"] == len(EXPECTED)
 
     def test_failure_rows_routed(self, spark, sink_dir):
         events = [
@@ -422,7 +426,7 @@ class TestEnvelopeDeltas:
         eng.replay(_events_df(spark), batch_size=10_000)  # single delta, no fold
         manifest = eng.sink.read_manifest()
         entries = manifest.tables["messages"]
-        assert any(isinstance(e, dict) and e.get("field") == "message"
+        assert any(isinstance(e, dict) and e.get("table") == "messages"
                    for e in entries)
         msgs = eng.table("messages")
         assert msgs.count() > 0

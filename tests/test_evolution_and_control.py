@@ -22,15 +22,15 @@ class _EngineV2(CdcEngine):
         orig_commit = self.sink.commit
 
         def commit_with_extra(**kw):
-            snap = kw["upserts"]["snapshot"]
+            snap = kw["tables"]["snapshot"]
             if not hasattr(snap, "withColumn"):
                 # r3: the stock engine ships snapshot rows zero-copy inside
                 # the envelope (EnvelopedDir); a v2 adding a column
                 # materializes them back into a DataFrame upsert — the
                 # sink's generic evolution path
                 snap = self.sink._read_dirs(
-                    [{"dir": snap.dir, "field": snap.field}]).drop("_seq")
-            kw["upserts"]["snapshot"] = snap.withColumn(
+                    [{"dir": snap.dir, "table": "snapshot"}]).drop("_seq")
+            kw["tables"]["snapshot"] = snap.withColumn(
                 "content_length", F.lit(batch_id * 1000).cast("long"))
             return orig_commit(**kw)
 
@@ -51,6 +51,10 @@ class TestEngineSchemaEvolution:
         # v2 engine (new snapshot column) resumes from the checkpoint
         v2 = _EngineV2(spark, sink)
         v2.replay(edf, batch_size=30)
+        # the snapshot delta holds only snapshot rows — no envelope row of
+        # another table leaks in as a null-key row
+        deltas = sink._read_dirs(sink.read_manifest().tables["snapshot"])
+        assert deltas.filter(F.col("repo").isNull()).count() == 0
         snap = v2.table("snapshot")
         assert "content_length" in snap.columns
         rows = {(r["repo"], r["path"]): r for r in snap.collect()}
