@@ -38,8 +38,14 @@ import pandas as pd  # noqa: E402
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from emailcdc.session import _usable_cpus  # noqa: E402
+from perfbench.hostenv import mem_total_mb  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", _usable_cpus()))
+# driver heap: 60% of RAM, at most 48 GB
+DRIVER_MEM = os.environ.get(
+    "SPARK_DRIVER_MEM", f"{min(48 * 1024, int(0.6 * mem_total_mb()))}m")
 N_EVENTS = int(os.environ.get("BENCH_EVENTS", "1000000"))
 N_KEYS = int(os.environ.get("BENCH_KEYS", str(max(N_EVENTS // 2, 1))))
 N_BATCHES = int(os.environ.get("BENCH_BATCHES", "2"))
@@ -66,7 +72,7 @@ BENCH_QUERIES = [
 
 def _bench_session(master: str, shuffle_partitions: int):
     from emailcdc.session import get_spark
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    os.environ.setdefault("SPARK_DRIVER_MEM", DRIVER_MEM)
     spark = get_spark(app=f"bench-{master}", master=master,
                       shuffle_partitions=shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
@@ -200,47 +206,25 @@ def _host_fault_rate_gbps() -> float:
     return round(0.25 / max(time.time() - t0, 1e-9), 3)
 
 
-_THP_ENABLED = "/sys/kernel/mm/transparent_hugepage/enabled"
-
-
-def _stabilize_host_memory(fault_gbps: float) -> dict:
-    """Counter two virtualization pathologies that otherwise swamp the
-    measurement (both observed on this sandbox after a VM restore; both
-    settings are no-ops on a healthy host):
-
-    1. THP faults through a lazy-memory hypervisor can run ~500x slower
-       than 4K faults (measured here: 0.003 vs 1.5 GB/s first-touch).
-       numpy madvises huge pages on large buffers by default, so every
-       Arrow/pandas batch stalls.  If the probe shows a pathological rate
-       and THP is not already off, switch it off and re-probe.
-    2. The hypervisor reclaims pages the guest frees (free-page
-       reporting) and serves each RE-fault through the same slow path, so
-       any allocator that returns memory to the OS per batch (Arrow
-       jemalloc decay, glibc trim/munmap, an unpinned G1 heap) re-pays
-       the fault cost every cycle.  Pin allocators to keep freed memory
-       in-process: Arrow -> system pool, glibc -> no trim/no mmap for
-       large chunks, JVM -> -Xms=-Xmx.  Exported via env BEFORE the JVM
-       spawns so Python workers inherit.
+def _stabilize_host_memory() -> dict:
+    """Counter a virtualization pathology that otherwise swamps the
+    measurement (observed on a sandbox after a VM restore; a no-op on a
+    healthy host): the hypervisor reclaims pages the guest frees
+    (free-page reporting) and serves each RE-fault through a slow path,
+    so any allocator that returns memory to the OS per batch (Arrow
+    jemalloc decay, glibc trim/munmap, an unpinned G1 heap) re-pays the
+    fault cost every cycle.  Pin allocators to keep freed memory
+    in-process: Arrow -> system pool, glibc -> no trim/no mmap for large
+    chunks, JVM -> -Xms=-Xmx.  Exported via env BEFORE the JVM spawns so
+    Python workers inherit.  Host settings are left alone; the
+    first-touch probe in the bench JSON says whether the host was slow.
 
     Returns a dict of what was applied, merged into the bench JSON."""
     applied: dict = {}
-    if fault_gbps < 0.05:
-        try:
-            with open(_THP_ENABLED) as fh:
-                mode = fh.read()
-            if "[never]" not in mode:
-                with open(_THP_ENABLED, "w") as fh:
-                    fh.write("never")
-                applied["thp_disabled"] = True
-                applied["host_first_touch_gbps_after_thp_off"] = \
-                    _host_fault_rate_gbps()
-        except OSError:
-            applied["thp_disabled"] = "unwritable"
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    heap = os.environ.get("SPARK_DRIVER_MEM", "48g")
-    os.environ.setdefault("EMAILCDC_DRIVER_JAVA_OPTS", f"-Xms{heap}")
+    os.environ.setdefault("EMAILCDC_DRIVER_JAVA_OPTS", f"-Xms{DRIVER_MEM}")
     applied["allocators_pinned"] = True
     return applied
 
@@ -249,7 +233,7 @@ def main() -> None:
     scaling = "--scaling" in sys.argv
     streaming = "--streaming" in sys.argv
     fault_gbps = _host_fault_rate_gbps()
-    stabilized = _stabilize_host_memory(fault_gbps)
+    stabilized = _stabilize_host_memory()
     work = tempfile.mkdtemp(prefix="bench_events_")
     events_path = os.path.join(work, "events.parquet")
     _generate(events_path)

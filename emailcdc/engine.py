@@ -2,7 +2,7 @@
 
 The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
 
-    events → [offset-range batch] → LWW winners aggregate + semi-join →
+    events → [offset-range batch] → winners + lineage aggregate → semi-join →
     skew-aware salted repartition → mapInArrow extraction → MOR commit
     (delta + marks, periodic compaction fold) → lineage/metrics rows
 
@@ -19,15 +19,16 @@ a salt derived from ``offset`` so one giant repo spreads over
 dropped — the MERGE stays key-correct because bucketing is on (repo, path).
 
 At 10^10-event scale nothing here is driver-bound: per-batch collects are
-O(#partitions × #op kinds + #above-threshold hot repos) — the hot-repo
-threshold is applied executor-side, so a long-tail repo distribution never
-ships its tail to the driver.
+O(#partitions + #above-threshold hot repos) — one grouping-sets aggregate
+over the raw batch's content-free columns yields both the LWW winners and
+the per-partition lineage rows, and the hot-repo threshold is applied
+executor-side, so a long-tail repo distribution never ships its tail to
+the driver.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -133,73 +134,58 @@ class CdcEngine:
         if current is not None and batch_id <= current:
             return BatchResult(batch_id, offset_lo, offset_hi, 0, 0, 0, skipped=True)
 
-        # LWW winners metadata — ONE groupBy computes both the winning
-        # offset (the semi-join side) and the winner's op (the delete
-        # mark) as max(struct(offset, op)), so no separate winner-marks
-        # scan + semi-join job runs per batch.  Two events of a key at one
-        # offset resolve to the larger op whatever their input order.
-        # Only key + offset + 1-char op are cached; winner CONTENT still
-        # flows straight from the parquet scan into extraction exactly once.
-        win_meta = (
-            batch.groupBy(*KEY)
+        # ONE aggregate over the content-free columns of the raw batch,
+        # with two grouping sets:
+        # - (repo, path): the LWW winner as max(struct(offset, op)) — two
+        #   events of a key at one offset resolve to the larger op whatever
+        #   their input order — plus the key's event count;
+        # - (partition_id): the per-partition lineage row (north rule) and
+        #   the delete count.
+        # It is persisted, and collecting its partition rows (O(#partitions)
+        # to the driver) fills the cache; the winners below read a filter of
+        # that cache.  Winner CONTENT flows straight from the parquet scan
+        # into extraction exactly once.
+        meta = (
+            batch.select(*KEY, "offset", "op",
+                         F.spark_partition_id().alias("partition_id"))
+            .groupingSets([KEY, ["partition_id"]], *KEY, "partition_id")
             .agg(F.max(F.struct("offset", "op")).alias("_win"),
-                 F.count(F.lit(1)).alias("_n_events"))
-            .select(*KEY, "_win.offset", "_win.op", "_n_events")
+                 F.count(F.lit(1)).alias("rows"),
+                 F.count(F.when(F.col("op") == "D", 1)).alias("deletes"),
+                 F.min("offset").alias("min_offset"))
             .persist()
         )
 
         try:
-            # Raw-batch stats job (reads only offset/op — Parquet scan prunes
-            # content): per-partition lineage rows (north rule), event count,
-            # op totals.  Driver receives O(#partitions × #op kinds) rows —
-            # constant-size regardless of key cardinality.  The stats collect
-            # and the winners materialization are independent jobs over the
-            # same scan — submit them concurrently (guide §2.6) so the second
-            # back-fills executors the first leaves idle.
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                stats_fut = pool.submit(
-                    lambda: batch.groupBy(
-                        F.spark_partition_id().alias("partition_id"), "op")
-                    .agg(
-                        F.count(F.lit(1)).alias("rows"),
-                        F.min("offset").alias("min_offset"),
-                        F.max("offset").alias("max_offset"),
-                    )
-                    .collect())
-                win_fut = pool.submit(win_meta.count)
-                stat_rows = stats_fut.result()
-                win_fut.result()
-            event_count = sum(r["rows"] for r in stat_rows)
-            per_partition: dict[int, list] = {}
-            op_totals: dict[str, int] = {}
-            for r in stat_rows:
-                pid = int(r["partition_id"])
-                agg = per_partition.setdefault(pid, [0, None, None])
-                agg[0] += r["rows"]
-                agg[1] = r["min_offset"] if agg[1] is None else min(agg[1], r["min_offset"])
-                agg[2] = r["max_offset"] if agg[2] is None else max(agg[2], r["max_offset"])
-                op_totals[r["op"]] = op_totals.get(r["op"], 0) + r["rows"]
+            # rows sort by their first field, the (unique) partition id
+            parts = sorted(meta.filter(F.col("partition_id").isNotNull())
+                           .select("partition_id", "rows", "deletes",
+                                   "min_offset",
+                                   F.col("_win.offset").alias("max_offset"))
+                           .collect())
+            win_meta = meta.filter(F.col("partition_id").isNull()).select(
+                *KEY, "_win.offset", "_win.op",
+                F.col("rows").alias("_n_events"))
             lineage_rows = [
-                {"batch_id": batch_id, "partition_id": pid, "rows": agg[0],
-                 "min_offset": agg[1], "max_offset": agg[2]}
-                for pid, agg in sorted(per_partition.items())
+                {"batch_id": batch_id, "partition_id": r["partition_id"],
+                 "rows": r["rows"], "min_offset": r["min_offset"],
+                 "max_offset": r["max_offset"]}
+                for r in parts
             ]
-            upsert_count = op_totals.get("I", 0) + op_totals.get("U", 0)
-            delete_count = op_totals.get("D", 0)
+            event_count = sum(r["rows"] for r in parts)
+            delete_count = sum(r["deletes"] for r in parts)
+            # every event that is not a delete is extracted as an upsert
+            upsert_count = event_count - delete_count
             if offset_lo is None:  # streaming path: derive bounds from the batch
-                offset_lo = min((a[1] for a in per_partition.values()), default=0)
+                offset_lo = min((r["min_offset"] for r in parts), default=0)
             if offset_hi is None:
-                offset_hi = max((a[2] for a in per_partition.values()), default=-1)
+                offset_hi = max((r["max_offset"] for r in parts), default=-1)
             # Hot-repo detection: threshold the per-repo counts EXECUTOR-side so
-            # the driver receives only repos ABOVE the threshold — the previous
-            # groupBy(partition_id, op, repo).collect() shipped O(#distinct
-            # repos-in-batch × partitions) rows, millions at 10^7-event batches
-            # over a long-tail repo distribution (VERDICT r2).  Skipped outright
-            # when no repo can clear the threshold.
-            # per-repo event counts fold up from the CACHED winners frame
-            # (sum of per-key counts == count over the raw batch — every
-            # event has exactly one key, every key one repo), so hot-repo
-            # detection no longer re-scans the batch parquet (guide §2.4)
+            # the driver receives only repos ABOVE the threshold (VERDICT r2),
+            # folding up the per-key counts of the CACHED winners (every
+            # event has exactly one key, every key one repo) — no re-scan of
+            # the batch.  Skipped outright when no repo can clear the
+            # threshold.
             hot_threshold = max(HOT_REPO_MIN_EVENTS,
                                 int(event_count * HOT_REPO_FRACTION))
             if event_count > hot_threshold:
@@ -217,11 +203,12 @@ class CdcEngine:
             # a window over the full rows — which shuffles the (multi-KB)
             # content column — the winning offsets come from the metadata-only
             # win_meta aggregation above and semi-join the batch on offset.
-            # No join hint: win_meta is cached and already counted, so its
-            # size statistic is exact and autoBroadcastJoinThreshold picks
-            # broadcast for driver-sized winner sets and a shuffle join
-            # past it.  Winner content is consumed exactly once — by the
-            # extraction pipeline — straight off the parquet scan.
+            # No join hint: win_meta reads the cache the lineage collect
+            # filled, so its size statistic is exact and
+            # autoBroadcastJoinThreshold picks broadcast for driver-sized
+            # winner sets and a shuffle join past it.  Winner content is
+            # consumed exactly once — by the extraction pipeline — straight
+            # off the parquet scan.
             upserts = (batch.join(win_meta.select("offset"), on="offset",
                                   how="leftsemi")
                        .filter(F.col("op") != "D"))
@@ -315,7 +302,7 @@ class CdcEngine:
             # a failed commit leaves the envelope dir as an orphan — it is
             # permanent data once the manifest references it, so cleanup
             # belongs to vacuum(), not to this code path
-            win_meta.unpersist()
+            meta.unpersist()
 
     # --- full replay --------------------------------------------------------------
 

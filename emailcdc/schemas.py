@@ -187,20 +187,6 @@ CALENDAR_ENTRIES = StructType(
     + [StructField("content_sha256", StringType(), True)]
 )
 
-# Control table: per-batch commit manifests (exactly-once core).
-COMMIT_MANIFEST = StructType(
-    [
-        StructField("batch_id", LongType(), False),
-        StructField("offset_lo", LongType(), False),
-        StructField("offset_hi", LongType(), False),
-        StructField("snapshot_id", LongType(), False),
-        StructField("event_count", LongType(), True),
-        StructField("upsert_count", LongType(), True),
-        StructField("delete_count", LongType(), True),
-        StructField("status", StringType(), True),
-    ]
-)
-
 # Per-partition lineage/metrics rows (north rule requirement).
 LINEAGE = StructType(
     [

@@ -28,8 +28,7 @@ def get_spark(app: str = "emailcdc", master: str | None = None,
         # default (47→25MB per 150k-event batch measured) at equal write
         # wall — less tmpfs RAM locally, less I/O + network at real scale
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("EMAILCDC_ARROW_BATCH", "10000"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         # the console progress bar writes \r-terminated stage lines that
         # splice themselves into adjacent stdout lines (corrupts logs and
