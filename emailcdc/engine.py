@@ -335,7 +335,7 @@ class CdcEngine:
 
     def table(self, name: str) -> DataFrame:
         df = self.sink.read_table(name)
-        if df is None:
-            schema = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}[name]
-            return self.spark.createDataFrame([], schema)
-        return df.drop("_bucket") if "_bucket" in df.columns else df
+        if df is not None:
+            return df
+        schema = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}[name]
+        return self.spark.createDataFrame([], schema)

@@ -30,10 +30,10 @@ the whole key space would otherwise rewrite the entire sink every batch):
   idempotent replay) and atomically replaces ``CURRENT`` (``os.replace``).
   A crash before the flip leaves only orphan files; ``vacuum()`` removes
   them.  Resume = read offsets off the CURRENT manifest.
-- **Additive schema evolution.**  Parquet ``mergeSchema`` across
-  base+delta files; commits diff the incoming schema against the
-  manifest's recorded schema and reject type changes (Iceberg's
-  safe-evolution default).
+- **Additive schema evolution.**  Commits diff the incoming schema against
+  the manifest's recorded schema, reject type changes (Iceberg's
+  safe-evolution default) and record the merge.  Reads use that schema,
+  never parquet footers: a column a file lacks reads as null.
 
 Tables: ``snapshot`` (live repos state), ``messages``, ``attachments``,
 ``calendar_entries`` (per-key detail rows, replaced on upsert) — keyed;
@@ -51,22 +51,19 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 KEY = ["repo", "path"]
 KEYED_TABLES = ("snapshot", "messages", "attachments", "calendar_entries")
 APPEND_TABLES = ("failures", "lineage")
 ALL_TABLES = KEYED_TABLES + APPEND_TABLES
 SEQ = "_seq"
+MARKS_SCHEMA = f"repo string, path string, {SEQ} long, is_delete boolean"
 
 
 def bucket_expr(n_buckets: int):
     """Iceberg-style bucket transform on the upsert key."""
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(n_buckets)).cast("int")
-
-
-def _has_parquet(d: str) -> bool:
-    return any(f.endswith(".parquet") for _, _, files in os.walk(d) for f in files)
 
 
 @dataclass
@@ -78,7 +75,7 @@ class EnvelopedDir:
     the rows whose ``record_type`` is the table and unwrap its struct
     column, so parquet column pruning never decodes the other tables'
     payload bytes.  ``schema`` is the table's row schema, known
-    statically, so commit-time schema checks need no file IO."""
+    statically, so commit-time schema checks and reads need no footers."""
     dir: str
     schema: StructType
 
@@ -173,42 +170,43 @@ class SnapshotParquetSink:
             return None
         w = Window.partitionBy(*KEY).orderBy(F.desc(SEQ))
         return (
-            self.spark.read.parquet(*manifest.marks)
+            self.spark.read.schema(MARKS_SCHEMA).parquet(*manifest.marks)
             .withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & ~F.col("is_delete"))
             .drop("_rn")
         )
 
-    def _read_dirs(self, entries: list) -> DataFrame | None:
-        """Union a table's registered data dirs.  Each entry is either a
-        plain dir path (rows hold the table columns directly) or an
-        envelope entry ``{"dir": d, "table": t}`` (rows of record type
-        ``t`` hold them inside struct ``t``; ``_seq`` is top-level) — see
-        EnvelopedDir."""
+    def _read_dirs(self, entries: list,
+                   schema_json: str | None) -> DataFrame | None:
+        """Union one table's data dirs, read with its manifest schema (a dir
+        with no data files reads as no rows).  Each entry is either a plain
+        dir path (rows hold the table columns directly) or an envelope
+        entry ``{"dir": d, "table": t}`` (rows of record type ``t`` hold
+        them inside struct ``t``; ``_seq`` is top-level) — EnvelopedDir."""
         if not entries:
             return None
+        schema = StructType.fromJson(json.loads(schema_json))
         plain = [e for e in entries if isinstance(e, str)]
         env = [e for e in entries if not isinstance(e, str)]
-        frames = []
-        if plain:
-            frames.append(self.spark.read.option("mergeSchema", "true")
-                          .parquet(*plain))
-        # one read per table covers all of its envelope dirs
-        for table in dict.fromkeys(e["table"] for e in env):
-            f = self.spark.read.option("mergeSchema", "true").parquet(
-                *[e["dir"] for e in env if e["table"] == table])
-            frames.append(f.filter(F.col("record_type") == table)
-                          .select(f"{table}.*", SEQ))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        frames = [self.spark.read.schema(schema).parquet(*plain)] if plain else []
+        if env:
+            table = env[0]["table"]
+            row = StructType([f for f in schema.fields if f.name != SEQ])
+            frames.append(
+                self.spark.read.schema(StructType([
+                    StructField("record_type", StringType()),
+                    StructField(table, row), StructField(SEQ, LongType())]))
+                .parquet(*[e["dir"] for e in env])
+                .filter(F.col("record_type") == table)
+                .select(f"{table}.*", SEQ))
+        return functools.reduce(DataFrame.unionByName, frames)
 
     def _visible(self, manifest: Manifest, table: str,
                  live: DataFrame | None) -> DataFrame | None:
-        """Rows of a keyed table visible at ``manifest``: those whose
-        ``_seq`` is their key's live mark (``live`` = _live_marks)."""
-        rows = self._read_dirs(manifest.tables.get(table, []))
+        """Rows of ``table`` visible at ``manifest``: those whose ``_seq`` is
+        their key's live mark (``live`` = _live_marks); all if ``live`` is None."""
+        rows = self._read_dirs(manifest.tables.get(table, []),
+                               manifest.schemas.get(table))
         if rows is None or live is None:
             return rows
         return (
@@ -223,19 +221,17 @@ class SnapshotParquetSink:
         manifest = self.read_manifest()
         if manifest is None or table not in manifest.tables:
             return None
-        if table in APPEND_TABLES:
-            rows = self._read_dirs(manifest.tables[table])
-        else:
-            rows = self._visible(manifest, table, self._live_marks(manifest))
-        return None if rows is None else rows.drop(SEQ, "_bucket")
+        live = None if table in APPEND_TABLES else self._live_marks(manifest)
+        rows = self._visible(manifest, table, live)
+        return None if rows is None else rows.drop(SEQ)
 
     # --- schema evolution ----------------------------------------------------
 
     @staticmethod
     def _check_schema(prev_schema_json: str | None, new_schema) -> None:
         """Additive-only evolution: reject type changes for same-named
-        columns (new columns are fine — parquet mergeSchema unions them;
-        old rows read as null)."""
+        columns (new columns are fine — reads use the merged manifest
+        schema, so old rows read them as null)."""
         if not prev_schema_json:
             return
         prev = StructType.fromJson(json.loads(prev_schema_json))
@@ -316,27 +312,24 @@ class SnapshotParquetSink:
             if val is None or (isinstance(val, tuple) and not val[0]):
                 continue
             if isinstance(val, EnvelopedDir):
-                entry, data_dir = {"dir": val.dir, "table": table}, val.dir
+                entry = {"dir": val.dir, "table": table}
                 schema = StructType(val.schema.fields
                                     + [StructField(SEQ, LongType(), False)])
                 self._check_schema(prev_schema, schema)
             elif isinstance(val, tuple):
-                entry = data_dir = _out_dir(table)
+                entry = _out_dir(table)
                 row_list, schema = val
-                os.makedirs(data_dir, exist_ok=True)
+                os.makedirs(entry, exist_ok=True)
                 self._write_local_parquet(
-                    os.path.join(data_dir, "part-0.parquet"), row_list, schema)
+                    os.path.join(entry, "part-0.parquet"), row_list, schema)
             else:
-                entry = data_dir = _out_dir(table)
+                entry = _out_dir(table)
                 stamped = val.withColumn(SEQ, F.lit(batch_id).cast("long"))
                 schema = stamped.schema
                 self._check_schema(prev_schema, schema)
                 stamped.withColumn("_bucket", bucket_expr(self.n_buckets)) \
-                    .write.mode("overwrite").parquet(data_dir)
-            # an all-empty write leaves no parquet files — don't register a
-            # dir Spark can't infer a schema from
-            if _has_parquet(data_dir):
-                new_tables[table] = prev_dirs + [entry]
+                    .write.mode("overwrite").parquet(entry)
+            new_tables[table] = prev_dirs + [entry]
             new_schemas[table] = self._merged_schema_json(prev_schema, schema)
 
         # marks (after table data, before manifest): one file per ~1M keys —
@@ -402,7 +395,7 @@ class SnapshotParquetSink:
             rows.withColumn("_bucket", bucket_expr(self.n_buckets)) \
                 .repartition(n_parts, "_bucket") \
                 .write.mode("overwrite").parquet(_base_dir(table))
-            return [_base_dir(table)] if _has_parquet(_base_dir(table)) else []
+            return [_base_dir(table)]
 
         try:
             with ThreadPoolExecutor(max_workers=len(KEYED_TABLES)) as pool:

@@ -6,7 +6,8 @@ messages / attachments / calendar_entries / failures / snapshot) as
 nullable structs — the Spark analog of the reference's multi-relationship
 fan-out (AbstractExtractEmailProcessor.java:16-32, SURVEY.md §2.1 R1)
 without parsing the content once per table.
-Callers persist the envelope and split it with cheap filters.
+The engine writes it flat and the sink filters it by ``record_type``;
+``split_envelope`` serves only the contract queries and tests.
 
 Scale notes (100 TB design):
 - Only ``offset, repo, path, commit, lang, content`` cross the Arrow

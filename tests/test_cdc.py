@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import make_change_events, make_eml, expected_final_state
-from emailcdc.sink import SnapshotParquetSink
+from emailcdc.sink import ALL_TABLES, SnapshotParquetSink
 from emailcdc.udfs import ENVELOPE_TABLES
 
 
@@ -163,19 +163,24 @@ class TestReplay:
             == base64.b64encode(bytes(r["content"])).decode("ascii")
             for r in rows)
 
-    def test_terminal_delete_removes_all_key_rows(self, spark, sink_dir):
+    def test_terminal_delete_removes_all_key_rows(self, spark, tmp_path):
         key = {"repo": "r1", "path": "a.eml", "lang": "eml"}
         events = [
             {"offset": 0, "op": "I", "ts": None, **key, "commit": "c0",
              "content": make_eml(1)},
             {"offset": 1, "op": "D", "ts": None, **key, "commit": None, "content": None},
         ]
-        eng = _engine(spark, sink_dir)
-        eng.replay(spark.createDataFrame(events, schema=schemas.CHANGE_EVENTS),
-                   batch_size=1)
-        assert eng.table("snapshot").count() == 0
-        assert eng.table("messages").count() == 0
-        assert eng.table("attachments").count() == 0
+        # compact_every=1: the delete batch folds every keyed table into an
+        # empty base, which must read back as no rows
+        for every in (8, 1):
+            eng = CdcEngine(spark, SnapshotParquetSink(
+                spark, str(tmp_path / f"every{every}"), n_buckets=8,
+                compact_every=every))
+            eng.replay(spark.createDataFrame(events, schema=schemas.CHANGE_EVENTS),
+                       batch_size=1)
+            assert eng.table("snapshot").count() == 0
+            assert eng.table("messages").count() == 0
+            assert eng.table("attachments").count() == 0
 
     def test_lineage_rows_cover_batch(self, spark, sink_dir):
         eng = _engine(spark, sink_dir)
@@ -465,3 +470,34 @@ class TestEnvelopeDeltas:
         msgs = eng.table("messages")
         assert msgs.count() > 0
         assert "_seq" not in msgs.columns
+
+
+class TestReadFrames:
+    """Reads take every schema from the manifest, so building a table's
+    read frame touches no parquet footer and runs no Spark job."""
+
+    def test_read_frame_builds_without_jobs(self, spark, tmp_path):
+        sink = SnapshotParquetSink(spark, str(tmp_path / "sink"), n_buckets=8,
+                                   compact_every=2)
+        eng = CdcEngine(spark, sink)
+        eng.replay(_events_df(spark), batch_size=25, max_batches=3)
+        manifest = sink.read_manifest()
+        # one fold (batch 2), then one envelope delta on top of the bases
+        assert manifest.delta_depth == 1
+        assert any(isinstance(e, str) for e in manifest.tables["messages"])
+        assert any(isinstance(e, dict) for e in manifest.tables["messages"])
+
+        sc, group = spark.sparkContext, "test-read-frame-builds"
+        sc.setJobGroup(group, "build read_table frames")
+        try:
+            frames = {t: sink.read_table(t) for t in ALL_TABLES}
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+            # the group does see this thread's jobs once an action runs
+            assert frames["snapshot"].count() > 0
+            assert sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # every table with registered dirs got a frame
+        built = {t for t in ALL_TABLES if frames[t] is not None}
+        assert built == {t for t in ALL_TABLES if manifest.tables[t]}
+        assert {"snapshot", "messages", "lineage"} <= built

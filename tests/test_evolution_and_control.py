@@ -29,7 +29,8 @@ class _EngineV2(CdcEngine):
                 # materializes them back into a DataFrame upsert — the
                 # sink's generic evolution path
                 snap = self.sink._read_dirs(
-                    [{"dir": snap.dir, "table": "snapshot"}]).drop("_seq")
+                    [{"dir": snap.dir, "table": "snapshot"}],
+                    snap.schema.json()).drop("_seq")
             kw["tables"]["snapshot"] = snap.withColumn(
                 "content_length", F.lit(batch_id * 1000).cast("long"))
             return orig_commit(**kw)
@@ -53,7 +54,9 @@ class TestEngineSchemaEvolution:
         v2.replay(edf, batch_size=30)
         # the snapshot delta holds only snapshot rows — no envelope row of
         # another table leaks in as a null-key row
-        deltas = sink._read_dirs(sink.read_manifest().tables["snapshot"])
+        manifest = sink.read_manifest()
+        deltas = sink._read_dirs(manifest.tables["snapshot"],
+                                 manifest.schemas["snapshot"])
         assert deltas.filter(F.col("repo").isNull()).count() == 0
         snap = v2.table("snapshot")
         assert "content_length" in snap.columns
