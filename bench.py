@@ -351,9 +351,9 @@ def _write_baseline_md(ladder: dict[int, float], pairs: dict[str, float],
         fh.write(
             "# BENCH — scaling evidence (north rule)\n\n"
             "Job: full CDC replay — seeded change-event log → content-free\n"
-            "LWW dedup (semi-join on winning offsets) → Arrow-native\n"
+            "LWW dedup (semi-join on the winning events) → Arrow-native\n"
             "`mapInArrow` extraction → zero-copy envelope delta commit with\n"
-            "marks journal.\n"
+            "delete tombstones.\n"
             f"Same input every run: {N_EVENTS:,} events over {N_KEYS:,} keys,\n"
             f"lang mix `{','.join(LANGS)}`, {N_BATCHES} micro-batches.  Each\n"
             "level runs **CPU-pinned via `sched_setaffinity`** so `local[N]`\n"

@@ -4,7 +4,13 @@ The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
 
     events → [offset-range batch] → winners + lineage aggregate → semi-join →
     skew-aware salted repartition → mapInArrow extraction → MOR commit
-    (delta + marks, periodic compaction fold) → lineage/metrics rows
+    (envelope delta with delete tombstones, periodic compaction fold) →
+    lineage/metrics rows
+
+Input contract: ``(repo, path, offset)`` is unique in the log.  A batch's
+winner per key is its event with the largest ``(offset, op)`` — two events
+of a key at one offset resolve to the larger op — and the batch semi-joins
+on that whole tuple, so exactly one event per key is extracted.
 
 Exactly-once: ``snapshot_id == batch_id`` is monotone; a batch whose id is
 ≤ the sink's CURRENT pointer is skipped idempotently, and resume reads
@@ -201,22 +207,17 @@ class CdcEngine:
 
             # LWW dedup: last event per key inside the batch wins.  Instead of
             # a window over the full rows — which shuffles the (multi-KB)
-            # content column — the winning offsets come from the metadata-only
-            # win_meta aggregation above and semi-join the batch on offset.
-            # No join hint: win_meta reads the cache the lineage collect
-            # filled, so its size statistic is exact and
+            # content column — the winning (key, offset, op) tuples come from
+            # the metadata-only win_meta aggregation above and semi-join the
+            # batch.  No join hint: win_meta reads the cache the lineage
+            # collect filled, so its size statistic is exact and
             # autoBroadcastJoinThreshold picks broadcast for driver-sized
             # winner sets and a shuffle join past it.  Winner content is
             # consumed exactly once — by the extraction pipeline — straight
-            # off the parquet scan.
-            upserts = (batch.join(win_meta.select("offset"), on="offset",
-                                  how="leftsemi")
-                       .filter(F.col("op") != "D"))
-            # one winning event per key → its op decides the delete mark;
-            # read off the cached win_meta — no extra batch scan/semi-join
-            winner_marks = win_meta.select(
-                *KEY, F.lit(batch_id).cast("long").alias("_seq"),
-                (F.col("op") == "D").alias("is_delete"))
+            # off the parquet scan.  Delete winners go along: extraction
+            # turns each into a tombstone of the snapshot journal.
+            winners = batch.join(win_meta.select(*KEY, "offset", "op"),
+                                 on=[*KEY, "offset", "op"], how="leftsemi")
 
             # --- skew: hot repos get an offset-derived salt for the parse ------
             # Parse-stage partitioning: the no-shuffle path inherits the
@@ -226,7 +227,7 @@ class CdcEngine:
             # salt and an explicit repartition so one giant repo spreads
             # over SALTS partitions (north rule's skew contract).
             if hot_repos:
-                salted = upserts.withColumn(
+                salted = winners.withColumn(
                     "_salt",
                     F.when(
                         F.col("repo").isin(hot_repos),
@@ -235,7 +236,7 @@ class CdcEngine:
                 ).repartition(self.spark.sparkContext.defaultParallelism,
                               "repo", "_salt").drop("_salt")
             else:
-                salted = upserts
+                salted = winners
 
             # --- extraction (the payload) ---------------------------------------
             # The envelope is parsed ONCE and written to parquet — and that
@@ -274,13 +275,15 @@ class CdcEngine:
                 "type_counts": type_counts,
             }
             # a table with no rows in this batch gets no delta; the rest
-            # register the envelope dir (zero-copy).  The snapshot
-            # MERGE-target rows ride the envelope too (one per upsert,
-            # sha256 computed in the extract worker), so no table write
-            # happens at commit time on the non-folding path at all.
+            # register the envelope dir (zero-copy).  The snapshot rows and
+            # the delete tombstones — the sink's key-visibility journal —
+            # ride the envelope too (one per winner, sha256 computed in the
+            # extract worker), so no table write happens at commit time on
+            # the non-folding path at all.
             tables: dict = {t: EnvelopedDir(stage_dir, schema)
                             for t, schema in ENVELOPE_TABLES.items()
-                            if type_counts[t] > 0}
+                            if type_counts[t] > 0
+                            or (t == "snapshot" and delete_count > 0)}
             tables["lineage"] = (lineage_rows, schemas.LINEAGE)
             self.sink.commit(
                 batch_id=batch_id,
@@ -288,12 +291,8 @@ class CdcEngine:
                 offset_hi=offset_hi,
                 tables=tables,
                 stats=stats,
-                # winner marks are already one-row-per-key, derived from a
-                # content-pruned scan (no extra distinct/join jobs)
-                marks=winner_marks,
                 epoch=epoch,
                 stream_id=stream_id,
-                approx_batch_keys=event_count,
             )
             return BatchResult(batch_id, offset_lo, offset_hi,
                                event_count, upsert_count, delete_count,

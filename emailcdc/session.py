@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the emailcdc package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app: str = "emailcdc", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -35,6 +38,9 @@ def get_spark(app: str = "emailcdc", master: str | None = None,
         # line-oriented output parsing)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Python workers unpickle the engine's functions by module path, so
+        # they import emailcdc from here whatever the caller's cwd is
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # Extra driver JVM flags (e.g. -Xms to pin the heap).  A G1 heap that
     # grows and shrinks re-commits pages every cycle; on a virtualized

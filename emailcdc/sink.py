@@ -8,23 +8,26 @@ Design (merge-on-read, like Iceberg v2 position/equality deletes or Hudi
 MOR — chosen over copy-on-write because a WAL tail whose keys spread over
 the whole key space would otherwise rewrite the entire sink every batch):
 
-- **Append-only delta commits.**  A batch commit writes, per table, one
-  immutable delta dir of new rows stamped with ``_seq = batch_id`` and ONE
-  shared *marks* file ``(repo, path, _seq, is_delete)`` covering every key
-  the batch touched.  A commit reads NOTHING — O(batch), not O(sink).
-- **LWW visibility at read.**  A row is visible iff its ``_seq`` equals
-  the key's latest mark and that mark is not a delete.  All keyed tables
-  share the marks (an upsert replaces ALL tables' rows for the key —
-  the reference reprocesses the whole file, SURVEY.md §2.1 K1).
+- **Append-only delta commits.**  A batch commit registers, per table,
+  one immutable delta of new rows stamped with ``_seq = batch_id`` —
+  usually the engine's envelope dir, so it writes no table data at all.
+  A commit reads NOTHING — O(batch), not O(sink).
+- **The snapshot table is the visibility journal.**  Like Iceberg v2,
+  where data rows carry their sequence number and only deletes get extra
+  records, every key the batch touched has one snapshot row: an upsert's
+  row, or a delete's *tombstone* (envelope record type ``_delete``).  A
+  key's live row is its latest snapshot row unless that is a tombstone;
+  a keyed table's row is visible iff its ``_seq`` equals the live row's.
+  All keyed tables share it (an upsert replaces ALL tables' rows for the
+  key — the reference reprocesses the whole file, SURVEY.md §2.1 K1).
 - **Compaction is the MOR read written back.**  When the sink's delta
   depth (commits since the last fold) reaches ``compact_every``, the
-  commit writes its delta as usual and then folds: the live marks (latest
-  mark per key, deletes dropped) become the single marks file and each
-  keyed table's VISIBLE rows — the same ``_visible`` path ``read_table``
-  uses — are rewritten, clustered on ``_bucket``, into ``base-<id>`` dirs.
-  Amortized O(sink / compact_every) per batch, exactly Iceberg's
-  rewrite_data_files maintenance.  Folded marks hold no delete marks: the
-  fold rewrote every table, so no older row of a deleted key survives.
+  commit registers its delta as usual and then folds: each keyed table's
+  VISIBLE rows — the same ``_visible`` path ``read_table`` uses — are
+  rewritten, clustered on ``_bucket``, into ``base-<id>`` dirs.  Amortized
+  O(sink / compact_every) per batch, exactly Iceberg's rewrite_data_files
+  maintenance.  Folded bases hold no tombstones: the fold rewrote every
+  table, so no older row of a deleted key survives.
 - **Manifests + atomic pointer flip.**  Each commit writes
   ``manifests/manifest-<snapshot_id>.json`` (snapshot_id == batch_id →
   idempotent replay) and atomically replaces ``CURRENT`` (``os.replace``).
@@ -53,12 +56,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .udfs import TOMBSTONE
+
 KEY = ["repo", "path"]
 KEYED_TABLES = ("snapshot", "messages", "attachments", "calendar_entries")
 APPEND_TABLES = ("failures", "lineage")
 ALL_TABLES = KEYED_TABLES + APPEND_TABLES
 SEQ = "_seq"
-MARKS_SCHEMA = f"repo string, path string, {SEQ} long, is_delete boolean"
 
 
 def bucket_expr(n_buckets: int):
@@ -88,8 +92,6 @@ class Manifest:
     offset_hi: int
     # table -> list of data dirs (each dir = one commit's delta or a base)
     tables: dict = field(default_factory=dict)
-    # list of marks files (key visibility journal), oldest→newest
-    marks: list = field(default_factory=list)
     schemas: dict = field(default_factory=dict)
     stats: dict = field(default_factory=dict)
     delta_depth: int = 0  # deltas since last compaction
@@ -164,47 +166,59 @@ class SnapshotParquetSink:
     # --- reads --------------------------------------------------------------
 
     def _live_marks(self, manifest: Manifest) -> DataFrame | None:
-        """Latest mark per key, delete marks dropped:
-        (repo, path, _seq, is_delete)."""
-        if not manifest.marks:
+        """The snapshot table's live rows: the latest snapshot row per key
+        (``_seq`` included), dropped when it is a tombstone."""
+        rows = self._read_dirs(manifest.tables.get("snapshot", []),
+                               manifest.schemas.get("snapshot"),
+                               tombstones=True)
+        if rows is None:
             return None
         w = Window.partitionBy(*KEY).orderBy(F.desc(SEQ))
         return (
-            self.spark.read.schema(MARKS_SCHEMA).parquet(*manifest.marks)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & ~F.col("is_delete"))
-            .drop("_rn")
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & ~F.col(TOMBSTONE))
+            .drop("_rn", TOMBSTONE)
         )
 
-    def _read_dirs(self, entries: list,
-                   schema_json: str | None) -> DataFrame | None:
+    def _read_dirs(self, entries: list, schema_json: str | None,
+                   tombstones: bool = False) -> DataFrame | None:
         """Union one table's data dirs, read with its manifest schema (a dir
         with no data files reads as no rows).  Each entry is either a plain
         dir path (rows hold the table columns directly) or an envelope
         entry ``{"dir": d, "table": t}`` (rows of record type ``t`` hold
-        them inside struct ``t``; ``_seq`` is top-level) — EnvelopedDir."""
+        them inside struct ``t``; ``_seq`` is top-level) — EnvelopedDir.
+        With ``tombstones`` (snapshot only) the envelope's tombstones are
+        read too, flagged by a boolean ``_delete`` column; plain dirs are
+        fold bases and hold none."""
         if not entries:
             return None
         schema = StructType.fromJson(json.loads(schema_json))
         plain = [e for e in entries if isinstance(e, str)]
         env = [e for e in entries if not isinstance(e, str)]
-        frames = [self.spark.read.schema(schema).parquet(*plain)] if plain else []
+        frames = [self.spark.read.schema(schema).parquet(*plain)
+                  .withColumn(TOMBSTONE, F.lit(False))] if plain else []
         if env:
             table = env[0]["table"]
             row = StructType([f for f in schema.fields if f.name != SEQ])
+            rt = F.col("record_type")
+            types = (table, TOMBSTONE) if tombstones else (table,)
             frames.append(
                 self.spark.read.schema(StructType([
                     StructField("record_type", StringType()),
                     StructField(table, row), StructField(SEQ, LongType())]))
                 .parquet(*[e["dir"] for e in env])
-                .filter(F.col("record_type") == table)
-                .select(f"{table}.*", SEQ))
-        return functools.reduce(DataFrame.unionByName, frames)
+                .filter(rt.isin(*types))
+                .select(f"{table}.*", SEQ, (rt == TOMBSTONE).alias(TOMBSTONE)))
+        rows = functools.reduce(DataFrame.unionByName, frames)
+        return rows if tombstones else rows.drop(TOMBSTONE)
 
     def _visible(self, manifest: Manifest, table: str,
                  live: DataFrame | None) -> DataFrame | None:
         """Rows of ``table`` visible at ``manifest``: those whose ``_seq`` is
-        their key's live mark (``live`` = _live_marks); all if ``live`` is None."""
+        their key's live row's (``live`` = _live_marks, which IS the visible
+        snapshot table); all if ``live`` is None."""
+        if table == "snapshot":
+            return live
         rows = self._read_dirs(manifest.tables.get(table, []),
                                manifest.schemas.get(table))
         if rows is None or live is None:
@@ -262,46 +276,27 @@ class SnapshotParquetSink:
         offset_hi: int,
         tables: dict,
         stats: dict | None = None,
-        marks: DataFrame | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
-        approx_batch_keys: int | None = None,
     ) -> Manifest:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
-        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir, a DataFrame
-        or local ``(rows, schema)``.  Rows of a keyed table replace ALL
-        existing rows for their key (visibility via the shared marks
-        journal); rows of an append table add to it.  ``marks`` holds one
-        row ``(repo, path, _seq, is_delete)`` per touched key; the engine
-        passes its LWW winners, and without it every key of a keyed
-        DataFrame is marked live.  Writes are pure appends; the commit that
-        brings the delta depth to ``compact_every`` then folds the sink
-        into base files (``_fold``).
+        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir or local
+        ``(rows, schema)``.  Rows of a keyed table replace ALL existing
+        rows for their key (visibility via the snapshot journal: the
+        snapshot delta must hold one row or tombstone per key the batch
+        touched); rows of an append table add to it.  Commits write only
+        local rows; the commit that brings the delta depth to
+        ``compact_every`` then folds the sink into base files (``_fold``).
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
 
-        keyed = [v for t, v in tables.items() if t in KEYED_TABLES]
-        if marks is None and keyed:
-            frames = [df.select(*KEY) for df in keyed]
-            marks = functools.reduce(DataFrame.unionByName, frames).distinct().select(
-                *KEY, F.lit(batch_id).cast("long").alias(SEQ),
-                F.lit(False).alias("is_delete"))
-
         new_tables: dict[str, list] = {}
         new_schemas: dict[str, str] = {}
 
-        def _out_dir(table: str) -> str:
-            return os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
-
         # Each table's delta.  An EnvelopedDir is registered as it is
-        # (zero-copy).  A DataFrame is stamped and written with `_bucket`
-        # as a data column: not partitionBy, because several delta roots
-        # with hive-style subdirs trip Spark's partition discovery, and not
-        # clustered on it, which would shuffle the multi-KB payload rows
-        # for files the next fold rewrites anyway.  Local rows become one
-        # parquet file.
+        # (zero-copy); local rows become one parquet file.
         for table in ALL_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
             prev_schema = prev.schemas.get(table) if prev else None
@@ -316,31 +311,14 @@ class SnapshotParquetSink:
                 schema = StructType(val.schema.fields
                                     + [StructField(SEQ, LongType(), False)])
                 self._check_schema(prev_schema, schema)
-            elif isinstance(val, tuple):
-                entry = _out_dir(table)
+            else:
+                entry = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
                 row_list, schema = val
                 os.makedirs(entry, exist_ok=True)
                 self._write_local_parquet(
                     os.path.join(entry, "part-0.parquet"), row_list, schema)
-            else:
-                entry = _out_dir(table)
-                stamped = val.withColumn(SEQ, F.lit(batch_id).cast("long"))
-                schema = stamped.schema
-                self._check_schema(prev_schema, schema)
-                stamped.withColumn("_bucket", bucket_expr(self.n_buckets)) \
-                    .write.mode("overwrite").parquet(entry)
             new_tables[table] = prev_dirs + [entry]
             new_schemas[table] = self._merged_schema_json(prev_schema, schema)
-
-        # marks (after table data, before manifest): one file per ~1M keys —
-        # a single partition is one straggler task (and one giant row
-        # group) at the documented 10^7-event batch size
-        marks_list = list(prev.marks) if prev else []
-        if marks is not None:
-            n_parts = max(1, min(16, -(-(approx_batch_keys or 1) // 1_000_000)))
-            marks.repartition(n_parts).write.mode("overwrite") \
-                .parquet(_out_dir("_marks"))
-            marks_list.append(_out_dir("_marks"))
 
         manifest = Manifest(
             snapshot_id=snapshot_id,
@@ -348,7 +326,6 @@ class SnapshotParquetSink:
             offset_lo=offset_lo,
             offset_hi=offset_hi,
             tables=new_tables,
-            marks=marks_list,
             schemas=new_schemas,
             stats=stats or {},
             delta_depth=prev.delta_depth + 1 if prev else 1,
@@ -365,13 +342,14 @@ class SnapshotParquetSink:
         return manifest
 
     def _fold(self, manifest: Manifest) -> Manifest:
-        """``manifest`` folded: its live marks as the one marks file and each
-        keyed table's visible rows, clustered on ``_bucket``, as one base.
+        """``manifest`` folded: each keyed table's visible rows, clustered on
+        ``_bucket``, as one base.
 
         Outputs go to ``base-<id>`` dirs: the fold reads this commit's own
-        ``snap-<id>`` delta.  The marks write fills the persisted live-marks
-        cache the table folds join against; the table folds are independent
-        actions, submitted together so Spark overlaps them.
+        ``snap-<id>`` delta.  The visible snapshot table IS the live marks,
+        so its fold runs first and fills the persisted live-marks cache the
+        other table folds join against; those are independent actions,
+        submitted together so Spark overlaps them.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -385,8 +363,6 @@ class SnapshotParquetSink:
         live = self._live_marks(manifest)
         if live is not None:
             live = live.persist()
-            live.repartition(n_parts).write.mode("overwrite") \
-                .parquet(_base_dir("_marks"))
 
         def _fold_table(table: str) -> list[str]:
             rows = self._visible(manifest, table, live)
@@ -397,17 +373,16 @@ class SnapshotParquetSink:
                 .write.mode("overwrite").parquet(_base_dir(table))
             return [_base_dir(table)]
 
+        details = KEYED_TABLES[1:]
         try:
-            with ThreadPoolExecutor(max_workers=len(KEYED_TABLES)) as pool:
-                folded = dict(zip(KEYED_TABLES,
-                                  pool.map(_fold_table, KEYED_TABLES)))
+            folded = {"snapshot": _fold_table("snapshot")}
+            with ThreadPoolExecutor(max_workers=len(details)) as pool:
+                folded.update(zip(details, pool.map(_fold_table, details)))
         finally:
             if live is not None:
                 live.unpersist()
         return dataclasses.replace(
-            manifest, tables={**manifest.tables, **folded},
-            marks=[_base_dir("_marks")] if live is not None else [],
-            delta_depth=0)
+            manifest, tables={**manifest.tables, **folded}, delta_depth=0)
 
     @staticmethod
     def _write_local_parquet(path: str, rows: list[dict], spark_schema) -> None:
@@ -488,11 +463,9 @@ class SnapshotParquetSink:
                 for d in dirs:
                     path = d if isinstance(d, str) else d["dir"]
                     live.add(os.path.normpath(path))
-            for d in manifest.marks:
-                live.add(os.path.normpath(d))
         removed = 0
         data_root = os.path.join(self.root, "data")
-        for table in list(ALL_TABLES) + ["_marks", "_envelope"]:
+        for table in list(ALL_TABLES) + ["_envelope"]:
             tdir = os.path.join(data_root, table)
             if not os.path.isdir(tdir):
                 continue

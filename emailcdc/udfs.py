@@ -10,9 +10,10 @@ The engine writes it flat and the sink filters it by ``record_type``;
 ``split_envelope`` serves only the contract queries and tests.
 
 Scale notes (100 TB design):
-- Only ``offset, repo, path, commit, lang, content`` cross the Arrow
-  boundary — project before calling (keeps the Python worker payload
-  minimal; Catalyst prunes the parquet scan to those columns).
+- Only ``offset, repo, path, commit, lang, content`` (and ``op`` when the
+  input has one) cross the Arrow boundary — project before calling
+  (keeps the Python worker payload minimal; Catalyst prunes the parquet
+  scan to those columns).
 - The pass is embarrassingly parallel: no shuffle is introduced here; the
   caller controls partitioning (salted repartition for hot repos happens
   upstream in engine.py).
@@ -52,6 +53,9 @@ ENVELOPE_TABLES = {
     # cached winners at commit time (VERDICT r2 #9)
     "snapshot": schemas.SNAPSHOT,
 }
+# Record type of a delete winner's tombstone: its ``snapshot`` struct holds
+# only repo, path and last_offset (the sink's key-visibility journal).
+TOMBSTONE = "_delete"
 ENVELOPE = StructType(
     [StructField("record_type", StringType(), False)]
     + [StructField(t, s, True) for t, s in ENVELOPE_TABLES.items()]
@@ -78,14 +82,23 @@ def _extract_partition(
                for n in ("offset", "repo", "path", "commit", "lang", "content")}
         folders = (batch.column("_folder").to_pylist() if has_folder
                    else [None] * batch.num_rows)
+        ops = (batch.column("op").to_pylist() if "op" in batch.schema.names
+               else [None] * batch.num_rows)
         # columnar assembly: one list per envelope column, dicts straight
         # into pa.array (C++-side struct building — no pandas objects)
         rts: list[str] = []
         cols: dict[str, list] = {t: [] for t in ENVELOPE_TABLES}
-        for offset, repo, path, commit, lang, content, folder in zip(
+        for offset, repo, path, commit, lang, content, folder, op in zip(
             col["offset"], col["repo"], col["path"], col["commit"],
-            col["lang"], col["content"], folders
+            col["lang"], col["content"], folders, ops
         ):
+            if op == "D":  # no content, no parse: one tombstone
+                rts.append(TOMBSTONE)
+                for c in cols:
+                    cols[c].append({"repo": repo, "path": path,
+                                    "last_offset": int(offset)}
+                                   if c == "snapshot" else None)
+                continue
             sha = sha256_hex(content) if content is not None else None
             result = extract_event(
                 repo, path, int(offset), commit, lang, content,
@@ -115,11 +128,14 @@ def extract_envelope(events: DataFrame, error_strategy: str = "continue",
                      folder_expression: str | None = None) -> DataFrame:
     """events(offset,repo,path,commit,lang,content,...) → envelope frame.
 
+    When ``events`` has an ``op`` column, each ``D`` event becomes one
+    ``TOMBSTONE`` record instead of being parsed.
+
     ``folder_expression`` — FOLDER_IDENTIFIER as a Spark SQL expression
     over the event columns (e.g. ``concat(repo, '/', path)``), evaluated
     JVM-side BEFORE the Arrow boundary so the Python worker receives the
     finished string (AbstractJavaMailProcessor.java:58-67 EL analog)."""
-    cols = list(_EXTRACT_COLS)
+    cols = _EXTRACT_COLS + (["op"] if "op" in events.columns else [])
     if folder_expression is not None:
         projected = events.select(
             *cols, F.expr(folder_expression).cast("string").alias("_folder"))

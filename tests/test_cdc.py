@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import make_change_events, make_eml, expected_final_state
-from emailcdc.sink import ALL_TABLES, SnapshotParquetSink
+from emailcdc.sink import ALL_TABLES, EnvelopedDir, SnapshotParquetSink
 from emailcdc.udfs import ENVELOPE_TABLES
 
 
@@ -114,9 +114,33 @@ class TestReplay:
             eng = _engine(spark, str(tmp_path / f"sink{i}"))
             batch = spark.createDataFrame(order, schema=schemas.CHANGE_EVENTS)
             eng.apply_batch(batch.coalesce(1), batch_id=1, offset_lo=0, offset_hi=0)
-            marks = spark.read.parquet(*eng.sink.read_manifest().marks)
-            seen.append([r["is_delete"] for r in marks.collect()])
-        assert seen[0] == seen[1] == [False]
+            # the snapshot journal (rows and tombstones) holds one U row
+            manifest = eng.sink.read_manifest()
+            journal = eng.sink._read_dirs(manifest.tables["snapshot"],
+                                          manifest.schemas["snapshot"],
+                                          tombstones=True)
+            seen.append([(r["commit"], r["_delete"]) for r in journal.collect()])
+            assert [r["commit"] for r in eng.table("snapshot").collect()] == ["c0"]
+        assert seen[0] == seen[1] == [("c0", False)]
+
+    def test_winners_are_key_exact(self, spark, sink_dir):
+        """The batch semi-joins its winners on (repo, path, offset, op): a
+        losing event that shares an offset with another key's winner, or
+        its own key's winning offset with a smaller op, stays hidden."""
+        def ev(offset, op, path):
+            return {"offset": offset, "op": op, "ts": None, "repo": "r",
+                    "path": path, "lang": "py", "commit": f"{path}{op}{offset}",
+                    "content": f"{path} {op} {offset}"}
+        events = [ev(5, "I", "a.py"), ev(5, "I", "b.py"), ev(6, "U", "b.py"),
+                  ev(7, "I", "c.py"), ev(7, "U", "c.py")]
+        eng = _engine(spark, sink_dir)
+        eng.apply_batch(_events_df(spark, events), batch_id=1,
+                        offset_lo=5, offset_hi=7)
+        rows = sorted((r["path"], r["last_offset"], r["commit"])
+                      for r in eng.table("snapshot").collect())
+        assert rows == [("a.py", 5, "a.pyI5"), ("b.py", 6, "b.pyU6"),
+                        ("c.py", 7, "c.pyU7")]
+        assert eng.sink.read_manifest().stats["type_counts"]["snapshot"] == 3
 
     def test_update_replaces_message_rows(self, spark, sink_dir):
         key = {"repo": "r1", "path": "a.eml", "lang": "eml"}
@@ -252,17 +276,30 @@ class TestReplay:
         assert eng.table("failures").count() == 0
 
 
+def _snapshot_envelope(spark, sink_dir, batch_id, rows, ddl):
+    """An envelope-shaped snapshot delta, as the engine writes one:
+    record_type 'snapshot', the rows in struct ``snapshot``, a top-level
+    ``_seq``."""
+    import os
+    df = spark.createDataFrame(rows, ddl)
+    d = os.path.join(sink_dir, "data", "_envelope", f"batch-{batch_id}")
+    df.select(F.lit("snapshot").alias("record_type"),
+              F.struct(*df.columns).alias("snapshot"),
+              F.lit(batch_id).cast("long").alias("_seq")).write.parquet(d)
+    return EnvelopedDir(d, df.schema)
+
+
 class TestSchemaEvolution:
     def test_additive_column_mid_replay(self, spark, sink_dir):
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
-        base = spark.createDataFrame(
-            [("r1", "p1", "c", "txt", "sha", 0)],
+        base = _snapshot_envelope(
+            spark, sink_dir, 1, [("r1", "p1", "c", "txt", "sha", 0)],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long",
         )
         sink.commit(1, 0, 0, {"snapshot": base})
-        evolved = spark.createDataFrame(
-            [("r1", "p2", "c", "txt", "sha2", 1, "new")],
+        evolved = _snapshot_envelope(
+            spark, sink_dir, 2, [("r1", "p2", "c", "txt", "sha2", 1, "new")],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long, extra_col string",
         )
@@ -275,11 +312,11 @@ class TestSchemaEvolution:
 
     def test_type_change_rejected(self, spark, sink_dir):
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
-        base = spark.createDataFrame([("r1", "p1", 1)],
-                                     "repo string, path string, v long")
+        base = _snapshot_envelope(spark, sink_dir, 1, [("r1", "p1", 1)],
+                                  "repo string, path string, v long")
         sink.commit(1, 0, 0, {"snapshot": base})
-        bad = spark.createDataFrame([("r1", "p1", "oops")],
-                                    "repo string, path string, v string")
+        bad = _snapshot_envelope(spark, sink_dir, 2, [("r1", "p1", "oops")],
+                                 "repo string, path string, v string")
         with pytest.raises(Exception, match="unsafe schema evolution"):
             sink.commit(2, 1, 1, {"snapshot": bad})
 
@@ -378,7 +415,6 @@ class TestVacuumAndCrash:
             os.path.join(sink_dir, "data", "_envelope",
                          f"batch-{current + 1}", "record_type=message"),
             os.path.join(sink_dir, "data", "snapshot", f"snap-{current + 1}"),
-            os.path.join(sink_dir, "data", "_marks", f"snap-{current + 1}"),
         ]
         for d in inflight:
             os.makedirs(d, exist_ok=True)

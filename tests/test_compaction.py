@@ -29,7 +29,7 @@ class TestCompaction:
         # fold actually happened: delta depth reset and dir lists collapsed
         manifest = sink.read_manifest()
         assert manifest.delta_depth < 2
-        assert len(manifest.marks) <= 2
+        assert len(manifest.tables["snapshot"]) <= 2
 
     def test_messages_replaced_across_fold(self, spark, sink_dir):
         from emailcdc.fixtures import make_eml
@@ -118,12 +118,14 @@ def _tables(sink):
 
 
 def _assert_folded_marks(spark, sink):
+    """A fold leaves the snapshot journal as one base dir: one row per key,
+    and every row live (no tombstone or deleted key survives)."""
     manifest = sink.read_manifest()
     assert manifest.delta_depth == 0
-    assert len(manifest.marks) == 1
-    marks = spark.read.parquet(manifest.marks[0])
-    assert marks.count() == marks.select("repo", "path").distinct().count()
-    assert marks.filter("is_delete").count() == 0
+    assert len(manifest.tables["snapshot"]) == 1
+    base = spark.read.parquet(manifest.tables["snapshot"][0])
+    assert base.count() == base.select("repo", "path").distinct().count()
+    assert base.count() == sink.read_table("snapshot").count()
 
 
 class TestFoldDifferential:

@@ -1,12 +1,15 @@
 """Engine-level schema evolution (mid-replay additive column — north rule)
 and the control-table surface."""
 
+import os
+
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
-from emailcdc.sink import SnapshotParquetSink
+from emailcdc.sink import EnvelopedDir, SnapshotParquetSink
 
 EVENTS = make_change_events(24)
 EXPECTED = expected_final_state(EVENTS)
@@ -22,17 +25,21 @@ class _EngineV2(CdcEngine):
         orig_commit = self.sink.commit
 
         def commit_with_extra(**kw):
+            # the stock engine ships snapshot rows and tombstones zero-copy
+            # inside the envelope (EnvelopedDir); a v2 writes its own
+            # envelope dir whose snapshot struct gains a column
             snap = kw["tables"]["snapshot"]
-            if not hasattr(snap, "withColumn"):
-                # r3: the stock engine ships snapshot rows zero-copy inside
-                # the envelope (EnvelopedDir); a v2 adding a column
-                # materializes them back into a DataFrame upsert — the
-                # sink's generic evolution path
-                snap = self.sink._read_dirs(
-                    [{"dir": snap.dir, "table": "snapshot"}],
-                    snap.schema.json()).drop("_seq")
-            kw["tables"]["snapshot"] = snap.withColumn(
-                "content_length", F.lit(batch_id * 1000).cast("long"))
+            v2_dir = os.path.join(self.sink.root, "data", "_envelope",
+                                  f"v2-{batch_id}")
+            self.spark.read.parquet(snap.dir).withColumn(
+                "snapshot", F.col("snapshot").withField(
+                    "content_length", F.lit(batch_id * 1000).cast("long"))
+            ).write.parquet(v2_dir)
+            # a fresh StructType: StructType.add would mutate schemas.SNAPSHOT
+            v2_schema = StructType(
+                list(snap.schema.fields)
+                + [StructField("content_length", LongType())])
+            kw["tables"]["snapshot"] = EnvelopedDir(v2_dir, v2_schema)
             return orig_commit(**kw)
 
         self.sink.commit = commit_with_extra

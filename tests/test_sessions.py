@@ -46,6 +46,12 @@ class TestStreamingSessionize:
         events = _events(spark)
         events.coalesce(1).write.parquet(src)
         stream = spark.readStream.schema(events.schema).parquet(src)
+        # A processing-time timeout asks for a no-data batch after every
+        # batch, so with them on the query never drains and
+        # processAllAvailable never returns.  The assertions below are on
+        # gap-closed sessions only, which the data batch emits.
+        no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+        spark.conf.set(no_data, "false")
         q = (
             sessionize_stream(stream, gap_minutes=30)
             .writeStream.format("memory").queryName("sess")
@@ -53,9 +59,13 @@ class TestStreamingSessionize:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
-        streamed = {(r["user_id"], r["session_idx"]): r
-                    for r in spark.sql("select * from sess").collect()}
+        try:
+            q.processAllAvailable()
+            streamed = {(r["user_id"], r["session_idx"]): r
+                        for r in spark.sql("select * from sess").collect()}
+        finally:
+            q.stop()
+            spark.conf.unset(no_data)
         # only sessions CLOSED by an observed gap are emitted (open sessions
         # wait in state for the timeout): that's exactly user 1's first one
         assert set(streamed) == {(1, 0)}
