@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 # only [ \t\n\x0b\f\r], while Python str.split() also splits on \xa0,
 #   etc., so a document containing Unicode whitespace would tokenize
 # differently engine-side vs oracle-side (ADVICE r4 #2).  findall of
-# non-whitespace runs also makes leading/trailing whitespace moot.
+# non-whitespace runs drops every empty token, where `split(trim(col))`
+# keeps one for a leading or trailing tab/newline run (`_ws_shingles`
+# keeps it too).
 _NON_WS_RUN = re.compile(r"[^ \t\n\r\f\x0b]+")
 _WS_RUN = re.compile(r"[ \t\n\r\f\x0b]+")
 
@@ -109,32 +111,32 @@ def shingles(col, n: int = 5) -> Column:
     )
 
 
+def _ws_shingles(text: str, n: int) -> list[str]:
+    """Word n-gram shingles of ``text`` exactly as ``shingles`` builds them:
+    tokens follow Java ``split`` after Spark's space-only ``trim`` (a
+    leading or trailing tab/newline run leaves an empty token), and a text
+    of fewer than ``n`` tokens collapses to one joined shingle."""
+    toks = _WS_RUN.split(text.strip(" "))
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
 def shingle_array(col, n: int = 5) -> Column:
     """DISTINCT word n-gram shingles as an Arrow-batched UDF —
     value-identical to ``array_distinct(shingles(col, n))`` (first-
-    occurrence order, short texts collapse to one joined shingle, and
-    tokens follow Java ``split`` after Spark's space-only ``trim``: a
-    leading or trailing tab/newline run leaves an empty token), but
-    the HOF form evaluates its lambda interpreted per shingle, which
-    dominates wall time on corpus-wide shingling (the r4 lesson across
+    occurrence order, ``_ws_shingles`` tokens), but the HOF form
+    evaluates its lambda interpreted per shingle, which dominates wall
+    time on corpus-wide shingling (the r4 lesson across
     minhash/fingerprint/hyperplane)."""
     from pyspark.sql.types import ArrayType, StringType
 
     @F.pandas_udf(ArrayType(StringType()))
     def _udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            if text is None:  # NULL in → NULL out, like the Catalyst form
-                out.append(None)
-                continue
-            toks = _WS_RUN.split(text.strip(" "))
-            if len(toks) < n:
-                out.append([" ".join(toks)])
-            else:
-                out.append(list(dict.fromkeys(
-                    " ".join(toks[i:i + n])
-                    for i in range(len(toks) - n + 1))))
-        return pd.Series(out)
+        # NULL in → NULL out, like the Catalyst form
+        return pd.Series([None if text is None
+                          else list(dict.fromkeys(_ws_shingles(text, n)))
+                          for text in texts])
 
     return _udf(F.col(col) if isinstance(col, str) else col)
 
@@ -168,21 +170,11 @@ def fingerprint(col, n: int = 5) -> Column:
 
     @F.pandas_udf(LongType())
     def _udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            if text is None:  # NULL in → NULL out, like the Catalyst form
-                out.append(None)
-                continue
-            toks = ascii_ws_tokens(text)
-            if len(toks) < n:
-                sh = [" ".join(toks)]
-            else:
-                sh = [" ".join(toks[i:i + n])
-                      for i in range(len(toks) - n + 1)]
-            out.append(min(
-                int(hashlib.sha256(s.encode("utf-8", "ignore"))
-                    .hexdigest()[:15], 16) for s in sh))
-        return pd.Series(out)
+        # NULL in → NULL out, like the Catalyst form; object dtype, since
+        # a float64 Series (ints beside None) rounds 60-bit hashes
+        return pd.Series([None if text is None else min(
+            int(hashlib.sha256(s.encode("utf-8", "ignore")).hexdigest()[:15], 16)
+            for s in _ws_shingles(text, n)) for text in texts], dtype=object)
 
     return _udf(F.col(col) if isinstance(col, str) else col)
 

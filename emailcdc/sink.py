@@ -416,11 +416,13 @@ class SnapshotParquetSink:
                     "upsert_count": m.stats.get("upsert_count"),
                     "delete_count": m.stats.get("delete_count"),
                     "hot_repos": m.stats.get("hot_repos") or [],
+                    "type_counts": m.stats.get("type_counts"),
                 }
             )
         schema = ("snapshot_id long, batch_id long, offset_lo long, offset_hi long,"
                   " delta_depth int, event_count long, upsert_count long,"
-                  " delete_count long, hot_repos array<string>")
+                  " delete_count long, hot_repos array<string>,"
+                  " type_counts map<string,long>")
         return self.spark.createDataFrame(rows, schema)
 
     # --- maintenance ----------------------------------------------------------

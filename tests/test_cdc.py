@@ -371,6 +371,26 @@ class TestSkew:
         # the 10k-repo tail
         assert max(sizes) < 1_000, sizes
 
+    def test_hot_repo_detection_runs_no_job(self, spark, tmp_path):
+        """Hot-repo detection rides the batch aggregate: a 400-event batch
+        over 10 repos (none hot) runs as many Spark jobs as a 40-event
+        one, counted as new ungrouped job ids around apply_batch."""
+        tracker = spark.sparkContext.statusTracker()
+        jobs = {}
+        for n in (40, 400):
+            batch = _events_df(spark, [
+                {"offset": i, "op": "I", "ts": None, "repo": f"r{i % 10}",
+                 "path": f"p{i}.txt", "lang": "txt", "commit": "c",
+                 "content": "v"} for i in range(n)]).cache()
+            batch.count()
+            before = set(tracker.getJobIdsForGroup(None))
+            res = _engine(spark, str(tmp_path / f"n{n}")).apply_batch(
+                batch, batch_id=1, offset_lo=0, offset_hi=n - 1)
+            jobs[n] = len(set(tracker.getJobIdsForGroup(None)) - before)
+            batch.unpersist()
+            assert res.event_count == n and res.hot_repos == ()
+        assert jobs[400] == jobs[40], jobs
+
 
 class TestVacuumAndCrash:
     def test_crash_before_flip_recovers(self, spark, sink_dir, tmp_path):

@@ -1,11 +1,15 @@
 """MOR compaction tests: the fold path must preserve exact state."""
 
+import concurrent.futures
 import json
+import os
+
+import pytest
 
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
-from emailcdc.sink import KEYED_TABLES, SnapshotParquetSink
+from emailcdc.sink import ALL_TABLES, SnapshotParquetSink
 
 EVENTS = make_change_events(30)
 EXPECTED = expected_final_state(EVENTS)
@@ -110,11 +114,11 @@ def _fold_log(batch_size):
 
 
 def _tables(sink):
-    """Each keyed table and ``failures`` as a sorted list of row JSON."""
+    """Each of the six tables as a sorted list of row JSON."""
     return {t: sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
                                  default=repr)
                       for r in sink.read_table(t).collect())
-            for t in KEYED_TABLES + ("failures",)}
+            for t in ALL_TABLES}
 
 
 def _assert_folded_marks(spark, sink):
@@ -154,3 +158,75 @@ class TestFoldDifferential:
             sink.compact_now(sink.current_snapshot_id() + 1)
             _assert_folded_marks(spark, sink)
             assert _tables(sink) == unfolded
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash(*args, **kwargs):
+    raise _Crash
+
+
+def _kill_sink(spark, path):
+    return SnapshotParquetSink(spark, path, n_buckets=4, compact_every=2)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """The tables of ``_fold_log(8)`` replayed with no kill."""
+    events = spark.createDataFrame(_fold_log(8), schema=schemas.CHANGE_EVENTS)
+    ref = _kill_sink(spark, str(tmp_path_factory.mktemp("uninterrupted")))
+    CdcEngine(spark, ref).replay(events, batch_size=8)
+    return _tables(ref)
+
+
+class TestKillPoints:
+    """A commit killed at a write boundary leaves a sink that a fresh
+    engine's replay, then vacuum(), brings to the uninterrupted replay's
+    tables."""
+
+    @pytest.mark.parametrize("boundary",
+                             ["commit_entry", "before_current", "mid_fold"])
+    def test_resume_after_kill(self, spark, tmp_path, monkeypatch,
+                               uninterrupted, boundary):
+        batch_size = 8
+        log = _fold_log(batch_size)
+        events = spark.createDataFrame(log, schema=schemas.CHANGE_EVENTS)
+        # the last batch folds (compact_every=2), the one before is a delta
+        n_batches = max(e["offset"] for e in log) // batch_size + 1
+        kill = n_batches if boundary == "mid_fold" else n_batches - 1
+        root = str(tmp_path / "killed")
+
+        CdcEngine(spark, _kill_sink(spark, root)).replay(
+            events, batch_size=batch_size, max_batches=kill - 1)
+        if boundary == "commit_entry":  # the envelope dir is written
+            monkeypatch.setattr(SnapshotParquetSink, "commit", _crash)
+            evidence = os.path.join(root, "data", "_envelope",
+                                    f"batch-{kill}")
+        elif boundary == "before_current":  # the manifest file is written
+            replace = os.replace
+            monkeypatch.setattr(os, "replace", lambda src, dst: _crash()
+                                if os.path.basename(dst) == "CURRENT"
+                                else replace(src, dst))
+            evidence = os.path.join(root, "manifests",
+                                    f"manifest-{kill}.json")
+        else:  # the snapshot base is written, the detail tables not folded
+            monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor",
+                                _crash)
+            evidence = os.path.join(root, "data", "snapshot", f"base-{kill}")
+        with pytest.raises(_Crash):
+            CdcEngine(spark, _kill_sink(spark, root)).replay(
+                events, batch_size=batch_size)
+        monkeypatch.undo()
+        assert _kill_sink(spark, root).current_snapshot_id() == kill - 1
+        assert os.path.exists(evidence)
+        if boundary == "mid_fold":
+            assert not os.path.exists(
+                os.path.join(root, "data", "messages", f"base-{kill}"))
+
+        resumed = _kill_sink(spark, root)
+        CdcEngine(spark, resumed).replay(events, batch_size=batch_size)
+        resumed.vacuum()
+        assert resumed.current_snapshot_id() == n_batches
+        assert _tables(resumed) == uninterrupted

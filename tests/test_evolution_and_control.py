@@ -97,3 +97,8 @@ class TestControlTable:
         assert ctl[0]["offset_lo"] == 0
         for prev, cur in zip(ctl, ctl[1:]):
             assert cur["offset_lo"] == prev["offset_hi"] + 1
+        # per-batch envelope row counts, as the manifest records them
+        for r in ctl:
+            assert r["type_counts"] == \
+                sink.read_manifest(r["snapshot_id"]).stats["type_counts"]
+        assert sum(r["type_counts"]["snapshot"] for r in ctl) > 0

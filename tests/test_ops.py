@@ -162,6 +162,12 @@ class TestEmbeddingOps:
         assert uncapped.count() == 40 * 39 // 2
 
 
+# whitespace edge cases of the Java-split tokenizer the shingle UDFs mirror
+_WS_TEXTS = ["\tfoo bar baz qux", "foo bar baz qux\n", "\n\tfoo bar",
+             " a b a b a b ", "a\t\x0bb\fc\rd e f", "", "   ", None,
+             "x\u00a0y z w v u"]
+
+
 class TestTextStats:
     def test_token_count(self, spark, docs):
         got = {r["doc_id"]: r["n"] for r in
@@ -192,15 +198,27 @@ class TestTextStats:
         """The Arrow UDF and the HOF form it replaces, run over the same
         rows: Java split keeps an empty token where a tab or newline run
         survives Spark's space-only trim."""
-        texts = ["\tfoo bar baz qux", "foo bar baz qux\n", "\n\tfoo bar",
-                 " a b a b a b ", "a\t\x0bb\fc\rd e f", "", "   ", None,
-                 "x\u00a0y z w v u"]
-        df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+        df = spark.createDataFrame(list(enumerate(_WS_TEXTS)),
+                                   "id long, t string")
         rows = df.select(
             "id", textstats.shingle_array("t", n).alias("udf"),
             F.array_distinct(textstats.shingles("t", n)).alias("hof")).collect()
         for r in rows:
-            assert r["udf"] == r["hof"], texts[r["id"]]
+            assert r["udf"] == r["hof"], _WS_TEXTS[r["id"]]
+
+    @pytest.mark.parametrize("n", [3, 5])
+    def test_fingerprint_matches_catalyst_form(self, spark, n):
+        """The Arrow UDF and the HOF form its DuckDB oracle mirrors, over
+        _WS_TEXTS in ONE Arrow batch, so NULL and 60-bit hashes share a
+        pandas Series."""
+        df = spark.createDataFrame(list(enumerate(_WS_TEXTS)),
+                                   "id long, t string").coalesce(1)
+        rows = df.select(
+            "id", textstats.fingerprint("t", n).alias("udf"),
+            F.array_min(F.transform(textstats.shingles("t", n),
+                                    textstats.hash60)).alias("hof")).collect()
+        for r in rows:
+            assert r["udf"] == r["hof"], _WS_TEXTS[r["id"]]
 
     def test_bpe_ish_count(self, spark):
         df = spark.createDataFrame([(0, "don't stop, it's 42%!")], "id long, t string")
