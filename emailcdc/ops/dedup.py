@@ -334,15 +334,6 @@ def simhash_chunks(col, n_chunks: int = 4, bits: int = 60) -> Column:
     return _udf(F.col(col) if isinstance(col, str) else col)
 
 
-def simhash_hamming(chunks_a, chunks_b) -> Column:
-    """Hamming distance between two chunked SimHashes (XOR + popcount)."""
-    return F.aggregate(
-        F.zip_with(chunks_a, chunks_b, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-
-
 def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
                        n_chunks: int = 4,
                        max_bucket: int | None = 1000) -> DataFrame:

@@ -179,20 +179,6 @@ def fingerprint(col, n: int = 5) -> Column:
     return _udf(F.col(col) if isinstance(col, str) else col)
 
 
-def document_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass per-document stats frame."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        F.round(punct_ratio(text_col), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(text_col), 6).alias("stopword_ratio"),
-        quality_score(text_col).alias("quality"),
-        langid(text_col).alias("lang_pred"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 def normalize_text(col) -> Column:
     """Canonical text normalization for dedup keys: lowercase, collapse
     whitespace runs to single spaces, trim.  Pure Catalyst — and exactly

@@ -22,11 +22,12 @@ the whole key space would otherwise rewrite the entire sink every batch):
   key — the reference reprocesses the whole file, SURVEY.md §2.1 K1).
 - **Compaction is the MOR read written back.**  When the sink's delta
   depth (commits since the last fold) reaches ``compact_every``, the
-  commit registers its delta as usual and then folds: each keyed table's
-  VISIBLE rows — the same ``_visible`` path ``read_table`` uses — are
-  rewritten, clustered on ``_bucket``, into ``base-<id>`` dirs.  Amortized
+  commit registers its delta as usual and then folds every table: the
+  VISIBLE rows (``_visible``, as ``read_table``) of all five envelope
+  tables, append tables included, become ONE envelope base clustered on
+  ``_bucket``, and ``lineage`` one plain base.  Amortized
   O(sink / compact_every) per batch, exactly Iceberg's rewrite_data_files
-  maintenance.  Folded bases hold no tombstones: the fold rewrote every
+  maintenance.  The base holds no tombstones: the fold rewrote every
   table, so no older row of a deleted key survives.
 - **Manifests + atomic pointer flip.**  Each commit writes
   ``manifests/manifest-<snapshot_id>.json`` (snapshot_id == batch_id →
@@ -56,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .udfs import TOMBSTONE
+from .udfs import ENVELOPE_TABLES, TOMBSTONE
 
 KEY = ["repo", "path"]
 KEYED_TABLES = ("snapshot", "messages", "attachments", "calendar_entries")
@@ -72,14 +73,15 @@ def bucket_expr(n_buckets: int):
 
 @dataclass
 class EnvelopedDir:
-    """A table's delta handed to ``commit`` as data ALREADY ON DISK: the
-    engine's flat envelope dir (udfs.ENVELOPE plus a top-level ``_seq``).
-    The commit registers it as the manifest entry ``{"dir": d, "table":
-    t}`` and writes nothing for the table (zero-copy delta).  Reads keep
-    the rows whose ``record_type`` is the table and unwrap its struct
-    column, so parquet column pruning never decodes the other tables'
-    payload bytes.  ``schema`` is the table's row schema, known
-    statically, so commit-time schema checks and reads need no footers."""
+    """A table's delta handed to ``commit`` as data ALREADY ON DISK: an
+    envelope-shaped dir (udfs.ENVELOPE plus a top-level ``_seq``) — the
+    engine's batch dir, or a fold's base.  The commit registers it as the
+    manifest entry ``{"dir": d, "table": t}`` and writes nothing for the
+    table (zero-copy delta).  Reads keep the rows whose ``record_type`` is
+    the table and unwrap its struct column, so parquet column pruning
+    never decodes the other tables' payload bytes.  ``schema`` is the
+    table's row schema, known statically, so commit-time schema checks
+    and reads need no footers."""
     dir: str
     schema: StructType
 
@@ -183,33 +185,29 @@ class SnapshotParquetSink:
     def _read_dirs(self, entries: list, schema_json: str | None,
                    tombstones: bool = False) -> DataFrame | None:
         """Union one table's data dirs, read with its manifest schema (a dir
-        with no data files reads as no rows).  Each entry is either a plain
-        dir path (rows hold the table columns directly) or an envelope
-        entry ``{"dir": d, "table": t}`` (rows of record type ``t`` hold
-        them inside struct ``t``; ``_seq`` is top-level) — EnvelopedDir.
-        With ``tombstones`` (snapshot only) the envelope's tombstones are
-        read too, flagged by a boolean ``_delete`` column; plain dirs are
-        fold bases and hold none."""
+        with no data files reads as no rows).  ``lineage``'s entries are
+        plain dir paths (rows hold the table columns directly); every
+        envelope table's are envelope entries ``{"dir": d, "table": t}``
+        (rows of record type ``t`` hold them inside struct ``t``; ``_seq``
+        is top-level) — EnvelopedDir.  With ``tombstones`` (snapshot only)
+        the envelope's tombstones are read too, flagged by a boolean
+        ``_delete`` column."""
         if not entries:
             return None
         schema = StructType.fromJson(json.loads(schema_json))
-        plain = [e for e in entries if isinstance(e, str)]
-        env = [e for e in entries if not isinstance(e, str)]
-        frames = [self.spark.read.schema(schema).parquet(*plain)
-                  .withColumn(TOMBSTONE, F.lit(False))] if plain else []
-        if env:
-            table = env[0]["table"]
-            row = StructType([f for f in schema.fields if f.name != SEQ])
-            rt = F.col("record_type")
-            types = (table, TOMBSTONE) if tombstones else (table,)
-            frames.append(
-                self.spark.read.schema(StructType([
-                    StructField("record_type", StringType()),
-                    StructField(table, row), StructField(SEQ, LongType())]))
-                .parquet(*[e["dir"] for e in env])
-                .filter(rt.isin(*types))
-                .select(f"{table}.*", SEQ, (rt == TOMBSTONE).alias(TOMBSTONE)))
-        rows = functools.reduce(DataFrame.unionByName, frames)
+        if isinstance(entries[0], str):
+            return self.spark.read.schema(schema).parquet(*entries)
+        table = entries[0]["table"]
+        row = StructType([f for f in schema.fields if f.name != SEQ])
+        rt = F.col("record_type")
+        types = (table, TOMBSTONE) if tombstones else (table,)
+        rows = (
+            self.spark.read.schema(StructType([
+                StructField("record_type", StringType()),
+                StructField(table, row), StructField(SEQ, LongType())]))
+            .parquet(*[e["dir"] for e in entries])
+            .filter(rt.isin(*types))
+            .select(f"{table}.*", SEQ, (rt == TOMBSTONE).alias(TOMBSTONE)))
         return rows if tombstones else rows.drop(TOMBSTONE)
 
     def _visible(self, manifest: Manifest, table: str,
@@ -281,13 +279,14 @@ class SnapshotParquetSink:
     ) -> Manifest:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
-        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir or local
-        ``(rows, schema)``.  Rows of a keyed table replace ALL existing
-        rows for their key (visibility via the snapshot journal: the
-        snapshot delta must hold one row or tombstone per key the batch
-        touched); rows of an append table add to it.  Commits write only
-        local rows; the commit that brings the delta depth to
-        ``compact_every`` then folds the sink into base files (``_fold``).
+        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir for an
+        envelope table, local ``(rows, schema)`` for ``lineage``.  Rows of
+        a keyed table replace ALL existing rows for their key (visibility
+        via the snapshot journal: the snapshot delta must hold one row or
+        tombstone per key the batch touched); rows of an append table add
+        to it.  Commits write only local rows; the commit that brings the
+        delta depth to ``compact_every`` then folds the sink into base
+        files (``_fold``).
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
@@ -342,45 +341,55 @@ class SnapshotParquetSink:
         return manifest
 
     def _fold(self, manifest: Manifest) -> Manifest:
-        """``manifest`` folded: each keyed table's visible rows, clustered on
-        ``_bucket``, as one base.
+        """``manifest`` folded in two writes: every envelope table's visible
+        rows (``failures``: all of them), projected back into envelope
+        shape and clustered on ``bucket_expr``, as ONE envelope base that
+        becomes each of those tables' single entry; then ``lineage``'s rows
+        as one plain base.
 
         Outputs go to ``base-<id>`` dirs: the fold reads this commit's own
-        ``snap-<id>`` delta.  The visible snapshot table IS the live marks,
-        so its fold runs first and fills the persisted live-marks cache the
-        other table folds join against; those are independent actions,
-        submitted together so Spark overlaps them.
+        ``batch-<id>`` delta.  The visible snapshot table IS the live marks,
+        persisted once for the snapshot rows and the keyed tables'
+        visibility joins.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         def _base_dir(table: str) -> str:
             return os.path.join(self.root, "data", table,
                                 f"base-{manifest.snapshot_id}")
 
-        # folds cover the FULL live key set: a fixed small partition count
-        # would write quarter-billion-row tasks at 10^9 sink keys
-        n_parts = min(self.n_buckets, 32)
         live = self._live_marks(manifest)
         if live is not None:
             live = live.persist()
-
-        def _fold_table(table: str) -> list[str]:
-            rows = self._visible(manifest, table, live)
-            if rows is None:
-                return []
-            rows.withColumn("_bucket", bucket_expr(self.n_buckets)) \
-                .repartition(n_parts, "_bucket") \
-                .write.mode("overwrite").parquet(_base_dir(table))
-            return [_base_dir(table)]
-
-        details = KEYED_TABLES[1:]
         try:
-            folded = {"snapshot": _fold_table("snapshot")}
-            with ThreadPoolExecutor(max_workers=len(details)) as pool:
-                folded.update(zip(details, pool.map(_fold_table, details)))
+            rows = {t: self._visible(manifest, t,
+                                     None if t in APPEND_TABLES else live)
+                    for t in ENVELOPE_TABLES if manifest.tables.get(t)}
+            types = {t: r.drop(SEQ).schema for t, r in rows.items()}
+            if rows:
+                # each table's rows back in envelope shape (its own struct,
+                # the others null), bucketed while repo, path are top-level
+                envelope = functools.reduce(DataFrame.union, [
+                    r.select(F.lit(t).alias("record_type"), *[
+                        (F.struct(*types[u].fieldNames()) if u == t
+                         else F.lit(None).cast(types[u])).alias(u)
+                        for u in types], SEQ,
+                        bucket_expr(self.n_buckets).alias("_bucket"))
+                    for t, r in rows.items()])
+                # folds cover the FULL live key set: a fixed small partition
+                # count would write quarter-billion-row tasks at 10^9 keys
+                envelope.repartition(min(self.n_buckets, 32), "_bucket") \
+                    .drop("_bucket") \
+                    .write.mode("overwrite").parquet(_base_dir("_envelope"))
         finally:
             if live is not None:
                 live.unpersist()
+        folded = {t: [{"dir": _base_dir("_envelope"), "table": t}]
+                  for t in rows}
+        lineage = self._read_dirs(manifest.tables.get("lineage", []),
+                                  manifest.schemas.get("lineage"))
+        if lineage is not None:  # a few rows per batch: one file
+            lineage.coalesce(1).write.mode("overwrite") \
+                .parquet(_base_dir("lineage"))
+            folded["lineage"] = [_base_dir("lineage")]
         return dataclasses.replace(
             manifest, tables={**manifest.tables, **folded}, delta_depth=0)
 

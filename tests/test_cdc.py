@@ -533,6 +533,7 @@ class TestReadFrames:
     read frame touches no parquet footer and runs no Spark job."""
 
     def test_read_frame_builds_without_jobs(self, spark, tmp_path):
+        import os
         sink = SnapshotParquetSink(spark, str(tmp_path / "sink"), n_buckets=8,
                                    compact_every=2)
         eng = CdcEngine(spark, sink)
@@ -540,7 +541,9 @@ class TestReadFrames:
         manifest = sink.read_manifest()
         # one fold (batch 2), then one envelope delta on top of the bases
         assert manifest.delta_depth == 1
-        assert any(isinstance(e, str) for e in manifest.tables["messages"])
+        assert manifest.tables["messages"][0] == {
+            "dir": os.path.join(sink.root, "data", "_envelope", "base-2"),
+            "table": "messages"}
         assert any(isinstance(e, dict) for e in manifest.tables["messages"])
 
         sc, group = spark.sparkContext, "test-read-frame-builds"

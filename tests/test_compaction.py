@@ -1,15 +1,17 @@
 """MOR compaction tests: the fold path must preserve exact state."""
 
-import concurrent.futures
 import json
 import os
+import shutil
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
 from emailcdc.sink import ALL_TABLES, SnapshotParquetSink
+from emailcdc.udfs import TOMBSTONE
 
 EVENTS = make_change_events(30)
 EXPECTED = expected_final_state(EVENTS)
@@ -121,15 +123,20 @@ def _tables(sink):
             for t in ALL_TABLES}
 
 
-def _assert_folded_marks(spark, sink):
-    """A fold leaves the snapshot journal as one base dir: one row per key,
-    and every row live (no tombstone or deleted key survives)."""
+def _assert_folded_marks(sink):
+    """A fold leaves every table, the snapshot journal included, as one
+    base entry: one snapshot row per key, and every row live (no tombstone
+    or deleted key survives)."""
     manifest = sink.read_manifest()
     assert manifest.delta_depth == 0
     assert len(manifest.tables["snapshot"]) == 1
-    base = spark.read.parquet(manifest.tables["snapshot"][0])
+    assert {t: len(e) for t, e in manifest.tables.items()} == \
+        dict.fromkeys(ALL_TABLES, 1)
+    base = sink._read_dirs(manifest.tables["snapshot"],
+                           manifest.schemas["snapshot"], tombstones=True)
     assert base.count() == base.select("repo", "path").distinct().count()
     assert base.count() == sink.read_table("snapshot").count()
+    assert base.filter(TOMBSTONE).count() == 0
 
 
 class TestFoldDifferential:
@@ -137,26 +144,30 @@ class TestFoldDifferential:
     sink that folds every second batch and one that never folds reads
     back the same rows, and so does a forced fold of either."""
 
-    def test_fold_matches_unfolded(self, spark, tmp_path):
+    def test_fold_matches_unfolded(self, spark, tmp_path, uninterrupted):
         batch_size = 8
         events = spark.createDataFrame(_fold_log(batch_size),
                                        schema=schemas.CHANGE_EVENTS)
-        sinks = {}
-        for every in (2, 1000):
-            sinks[every] = SnapshotParquetSink(
-                spark, str(tmp_path / f"every{every}"), n_buckets=4,
-                compact_every=every)
-            CdcEngine(spark, sinks[every]).replay(events, batch_size=batch_size)
-        folded, unfolded = _tables(sinks[2]), _tables(sinks[1000])
+        every2, folded = uninterrupted  # compact_every=2, n_buckets=4
+        sinks = {1000: SnapshotParquetSink(spark, str(tmp_path / "every1000"),
+                                           n_buckets=4, compact_every=1000)}
+        CdcEngine(spark, sinks[1000]).replay(events, batch_size=batch_size)
+        unfolded = _tables(sinks[1000])
         assert folded == unfolded
         assert folded["failures"] and folded["calendar_entries"]
         assert '"path": "a.eml"' in "".join(folded["snapshot"])
-        _assert_folded_marks(spark, sinks[2])
+        _assert_folded_marks(every2)
         assert sinks[1000].read_manifest().delta_depth > 1
+        # the fold left no batch's envelope dir referenced
+        every2.vacuum()
+        assert not [d for d in os.listdir(os.path.join(
+            every2.root, "data", "_envelope")) if d.startswith("batch-")]
 
+        shutil.copytree(every2.root, tmp_path / "every2")
+        sinks[2] = _kill_sink(spark, str(tmp_path / "every2"))
         for sink in sinks.values():
             sink.compact_now(sink.current_snapshot_id() + 1)
-            _assert_folded_marks(spark, sink)
+            _assert_folded_marks(sink)
             assert _tables(sink) == unfolded
 
 
@@ -174,11 +185,12 @@ def _kill_sink(spark, path):
 
 @pytest.fixture(scope="module")
 def uninterrupted(spark, tmp_path_factory):
-    """The tables of ``_fold_log(8)`` replayed with no kill."""
+    """``_fold_log(8)`` replayed with no kill (the last batch folds): the
+    sink, and its tables as read before any ``compact_now``."""
     events = spark.createDataFrame(_fold_log(8), schema=schemas.CHANGE_EVENTS)
     ref = _kill_sink(spark, str(tmp_path_factory.mktemp("uninterrupted")))
     CdcEngine(spark, ref).replay(events, batch_size=8)
-    return _tables(ref)
+    return ref, _tables(ref)
 
 
 class TestKillPoints:
@@ -211,10 +223,13 @@ class TestKillPoints:
                                 else replace(src, dst))
             evidence = os.path.join(root, "manifests",
                                     f"manifest-{kill}.json")
-        else:  # the snapshot base is written, the detail tables not folded
-            monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor",
-                                _crash)
-            evidence = os.path.join(root, "data", "snapshot", f"base-{kill}")
+        else:  # the envelope base is written, lineage not yet folded
+            parquet = DataFrameWriter.parquet
+            monkeypatch.setattr(
+                DataFrameWriter, "parquet", lambda self, path, *a, **kw:
+                _crash() if path.endswith(os.path.join("lineage", f"base-{kill}"))
+                else parquet(self, path, *a, **kw))
+            evidence = os.path.join(root, "data", "_envelope", f"base-{kill}")
         with pytest.raises(_Crash):
             CdcEngine(spark, _kill_sink(spark, root)).replay(
                 events, batch_size=batch_size)
@@ -223,10 +238,10 @@ class TestKillPoints:
         assert os.path.exists(evidence)
         if boundary == "mid_fold":
             assert not os.path.exists(
-                os.path.join(root, "data", "messages", f"base-{kill}"))
+                os.path.join(root, "data", "lineage", f"base-{kill}"))
 
         resumed = _kill_sink(spark, root)
         CdcEngine(spark, resumed).replay(events, batch_size=batch_size)
         resumed.vacuum()
         assert resumed.current_snapshot_id() == n_batches
-        assert _tables(resumed) == uninterrupted
+        assert _tables(resumed) == uninterrupted[1]
