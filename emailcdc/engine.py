@@ -36,7 +36,6 @@ its tail to the driver.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -106,24 +105,8 @@ class CdcEngine:
         ``stream_id`` (the checkpoint's query id) differs from the one the
         manifest recorded, the watermark belongs to ANOTHER stream and
         returns None — a cleared checkpoint restarts epochs at 0 and must
-        not be silently skipped (ADVICE r2).  A manifest that predates the
-        stream_id field is likewise UNOWNED for a stream-aware caller: its
-        legacy watermark must not drop the fresh checkpoint's epochs
-        (which restart at 0); the next commit stamps the new stream_id and
-        claims it (ADVICE r3).  Only a legacy caller (stream_id=None)
-        keeps the old global-watermark behavior.
-
-        Documented trade-off (ADVICE r4): when the SAME stream's
-        checkpoint survives an engine upgrade from the pre-stream_id
-        format, one in-flight epoch — committed to the sink but not yet
-        to the checkpoint at upgrade time — is re-delivered on restart
-        and re-applied (last_epoch reads None for the unowned manifest).
-        The manifest cannot distinguish that upgrade from a fresh stream
-        attaching to an old sink, and silently dropping a fresh stream's
-        epoch 0..N is permanent data loss, so the unowned reading is the
-        safe default; re-applying an upsert epoch is idempotent at the
-        row level (same keys, same _seq ordering) but appends duplicate
-        lineage/failure rows for that one epoch."""
+        not be silently skipped (ADVICE r2).  Only a legacy caller
+        (stream_id=None) keeps the old global-watermark behavior."""
         manifest = self.sink.read_manifest()
         if manifest is None:
             return None
@@ -250,8 +233,7 @@ class CdcEngine:
                 self.missing_field_strategy, self.missing_field_substitution,
                 folder_expression=self.folder_expression
             ).withColumn("_seq", F.lit(batch_id).cast("long"))
-            stage_dir = os.path.join(self.sink.root, "data", "_envelope",
-                                     f"batch-{batch_id}")
+            stage_dir = self.sink.batch_dir(batch_id)
             # FLAT write — record_type stays a data column.  partitionBy
             # forced a per-task sort of the multi-KB envelope rows plus up
             # to 5× the files (measured +0.7 s per 500k-event batch warm,
@@ -264,7 +246,8 @@ class CdcEngine:
             observed = envelope.observe(obs, *[
                 F.count(F.when(F.col("record_type") == t, 1)).alias(t)
                 for t in ENVELOPE_TABLES])
-            observed.write.mode("overwrite").parquet(stage_dir)
+            observed.write.mode("overwrite").parquet(
+                self.sink.data_path(stage_dir))
             type_counts = obs.get
 
             stats = {

@@ -12,6 +12,10 @@ the whole key space would otherwise rewrite the entire sink every batch):
   one immutable delta of new rows stamped with ``_seq = batch_id`` —
   usually the engine's envelope dir, so it writes no table data at all.
   A commit reads NOTHING — O(batch), not O(sink).
+- **One data-dir format.**  Every data dir is envelope-shaped
+  (``record_type``, one struct column per table, a top-level ``_seq``),
+  and manifests name dirs relative to ``<root>/data`` — so a copied or
+  moved sink reads and vacuums only its own files.
 - **The snapshot table is the visibility journal.**  Like Iceberg v2,
   where data rows carry their sequence number and only deletes get extra
   records, every key the batch touched has one snapshot row: an upsert's
@@ -24,8 +28,8 @@ the whole key space would otherwise rewrite the entire sink every batch):
   depth (commits since the last fold) reaches ``compact_every``, the
   commit registers its delta as usual and then folds every table: the
   VISIBLE rows (``_visible``, as ``read_table``) of all five envelope
-  tables, append tables included, become ONE envelope base clustered on
-  ``_bucket``, and ``lineage`` one plain base.  Amortized
+  tables, append tables included, and all ``lineage`` rows become ONE
+  envelope base clustered on ``_bucket``.  Amortized
   O(sink / compact_every) per batch, exactly Iceberg's rewrite_data_files
   maintenance.  The base holds no tombstones: the fold rewrote every
   table, so no older row of a deleted key survives.
@@ -57,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .udfs import ENVELOPE_TABLES, TOMBSTONE
+from .udfs import TOMBSTONE
 
 KEY = ["repo", "path"]
 KEYED_TABLES = ("snapshot", "messages", "attachments", "calendar_entries")
@@ -73,15 +77,12 @@ def bucket_expr(n_buckets: int):
 
 @dataclass
 class EnvelopedDir:
-    """A table's delta handed to ``commit`` as data ALREADY ON DISK: an
-    envelope-shaped dir (udfs.ENVELOPE plus a top-level ``_seq``) — the
-    engine's batch dir, or a fold's base.  The commit registers it as the
-    manifest entry ``{"dir": d, "table": t}`` and writes nothing for the
-    table (zero-copy delta).  Reads keep the rows whose ``record_type`` is
-    the table and unwrap its struct column, so parquet column pruning
-    never decodes the other tables' payload bytes.  ``schema`` is the
-    table's row schema, known statically, so commit-time schema checks
-    and reads need no footers."""
+    """A table's delta handed to ``commit`` as data ALREADY ON DISK: the
+    envelope-shaped data dir named ``dir`` (relative to ``<root>/data``,
+    e.g. the sink's ``batch_dir``).  The commit registers ``dir`` as the
+    table's manifest entry and writes nothing for the table (zero-copy
+    delta).  ``schema`` is the table's row schema, known statically, so
+    commit-time schema checks and reads need no footers."""
     dir: str
     schema: StructType
 
@@ -92,7 +93,8 @@ class Manifest:
     batch_id: int
     offset_lo: int
     offset_hi: int
-    # table -> list of data dirs (each dir = one commit's delta or a base)
+    # table -> list of data dir names relative to <root>/data (each dir =
+    # one commit's delta or a fold's base), e.g. "_envelope/batch-5"
     tables: dict = field(default_factory=dict)
     schemas: dict = field(default_factory=dict)
     stats: dict = field(default_factory=dict)
@@ -138,6 +140,15 @@ class SnapshotParquetSink:
     def _manifest_path(self, snapshot_id: int) -> str:
         return os.path.join(self.root, "manifests", f"manifest-{snapshot_id}.json")
 
+    def data_path(self, name: str) -> str:
+        """Where the data dir ``name`` (a manifest entry) lives."""
+        return os.path.join(self.root, "data", name)
+
+    @staticmethod
+    def batch_dir(batch_id: int) -> str:
+        """The name of the data dir batch ``batch_id``'s envelope goes to."""
+        return f"_envelope/batch-{batch_id}"
+
     def current_snapshot_id(self) -> int | None:
         try:
             with open(self._current_path) as fh:
@@ -170,9 +181,7 @@ class SnapshotParquetSink:
     def _live_marks(self, manifest: Manifest) -> DataFrame | None:
         """The snapshot table's live rows: the latest snapshot row per key
         (``_seq`` included), dropped when it is a tombstone."""
-        rows = self._read_dirs(manifest.tables.get("snapshot", []),
-                               manifest.schemas.get("snapshot"),
-                               tombstones=True)
+        rows = self._read_dirs(manifest, "snapshot", tombstones=True)
         if rows is None:
             return None
         w = Window.partitionBy(*KEY).orderBy(F.desc(SEQ))
@@ -182,22 +191,19 @@ class SnapshotParquetSink:
             .drop("_rn", TOMBSTONE)
         )
 
-    def _read_dirs(self, entries: list, schema_json: str | None,
+    def _read_dirs(self, manifest: Manifest, table: str,
                    tombstones: bool = False) -> DataFrame | None:
-        """Union one table's data dirs, read with its manifest schema (a dir
-        with no data files reads as no rows).  ``lineage``'s entries are
-        plain dir paths (rows hold the table columns directly); every
-        envelope table's are envelope entries ``{"dir": d, "table": t}``
-        (rows of record type ``t`` hold them inside struct ``t``; ``_seq``
-        is top-level) — EnvelopedDir.  With ``tombstones`` (snapshot only)
-        the envelope's tombstones are read too, flagged by a boolean
-        ``_delete`` column."""
+        """Union ``table``'s data dirs at ``manifest``, read with its
+        manifest schema (a dir with no data files reads as no rows).  Every
+        dir is envelope-shaped: rows of record type ``table`` hold its
+        columns inside struct ``table``, ``_seq`` is top-level — so parquet
+        column pruning never decodes the other tables' payload bytes.  With
+        ``tombstones`` (snapshot only) the envelope's tombstones are read
+        too, flagged by a boolean ``_delete`` column."""
+        entries = manifest.tables.get(table)
         if not entries:
             return None
-        schema = StructType.fromJson(json.loads(schema_json))
-        if isinstance(entries[0], str):
-            return self.spark.read.schema(schema).parquet(*entries)
-        table = entries[0]["table"]
+        schema = StructType.fromJson(json.loads(manifest.schemas[table]))
         row = StructType([f for f in schema.fields if f.name != SEQ])
         rt = F.col("record_type")
         types = (table, TOMBSTONE) if tombstones else (table,)
@@ -205,7 +211,7 @@ class SnapshotParquetSink:
             self.spark.read.schema(StructType([
                 StructField("record_type", StringType()),
                 StructField(table, row), StructField(SEQ, LongType())]))
-            .parquet(*[e["dir"] for e in entries])
+            .parquet(*map(self.data_path, entries))
             .filter(rt.isin(*types))
             .select(f"{table}.*", SEQ, (rt == TOMBSTONE).alias(TOMBSTONE)))
         return rows if tombstones else rows.drop(TOMBSTONE)
@@ -217,8 +223,7 @@ class SnapshotParquetSink:
         snapshot table); all if ``live`` is None."""
         if table == "snapshot":
             return live
-        rows = self._read_dirs(manifest.tables.get(table, []),
-                               manifest.schemas.get(table))
+        rows = self._read_dirs(manifest, table)
         if rows is None or live is None:
             return rows
         return (
@@ -280,7 +285,8 @@ class SnapshotParquetSink:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
         ``tables[t]`` is table ``t``'s delta: an EnvelopedDir for an
-        envelope table, local ``(rows, schema)`` for ``lineage``.  Rows of
+        envelope table, local ``(rows, schema)`` for ``lineage`` (written
+        in envelope shape to ``lineage/snap-<id>``).  Rows of
         a keyed table replace ALL existing rows for their key (visibility
         via the snapshot journal: the snapshot delta must hold one row or
         tombstone per key the batch touched); rows of an append table add
@@ -295,7 +301,7 @@ class SnapshotParquetSink:
         new_schemas: dict[str, str] = {}
 
         # Each table's delta.  An EnvelopedDir is registered as it is
-        # (zero-copy); local rows become one parquet file.
+        # (zero-copy); local rows become one envelope-shaped parquet file.
         for table in ALL_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
             prev_schema = prev.schemas.get(table) if prev else None
@@ -306,16 +312,15 @@ class SnapshotParquetSink:
             if val is None or (isinstance(val, tuple) and not val[0]):
                 continue
             if isinstance(val, EnvelopedDir):
-                entry = {"dir": val.dir, "table": table}
-                schema = StructType(val.schema.fields
-                                    + [StructField(SEQ, LongType(), False)])
-                self._check_schema(prev_schema, schema)
+                entry, schema = val.dir, val.schema
             else:
-                entry = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
+                entry = f"{table}/snap-{snapshot_id}"
                 row_list, schema = val
-                os.makedirs(entry, exist_ok=True)
-                self._write_local_parquet(
-                    os.path.join(entry, "part-0.parquet"), row_list, schema)
+                self._write_local_envelope(entry, table, row_list, schema,
+                                           batch_id)
+            schema = StructType(schema.fields
+                                + [StructField(SEQ, LongType(), False)])
+            self._check_schema(prev_schema, schema)
             new_tables[table] = prev_dirs + [entry]
             new_schemas[table] = self._merged_schema_json(prev_schema, schema)
 
@@ -341,28 +346,25 @@ class SnapshotParquetSink:
         return manifest
 
     def _fold(self, manifest: Manifest) -> Manifest:
-        """``manifest`` folded in two writes: every envelope table's visible
-        rows (``failures``: all of them), projected back into envelope
-        shape and clustered on ``bucket_expr``, as ONE envelope base that
-        becomes each of those tables' single entry; then ``lineage``'s rows
-        as one plain base.
+        """``manifest`` folded in ONE write: every table's visible rows
+        (append tables: all of them), projected back into envelope shape
+        and clustered on ``bucket_expr`` (``lineage``, which has no key, in
+        one constant bucket), as the envelope base that becomes each
+        table's single entry.
 
-        Outputs go to ``base-<id>`` dirs: the fold reads this commit's own
-        ``batch-<id>`` delta.  The visible snapshot table IS the live marks,
-        persisted once for the snapshot rows and the keyed tables'
-        visibility joins.
+        The output goes to a ``base-<id>`` dir: the fold reads this
+        commit's own ``batch-<id>`` delta.  The visible snapshot table IS
+        the live marks, persisted once for the snapshot rows and the keyed
+        tables' visibility joins.
         """
-        def _base_dir(table: str) -> str:
-            return os.path.join(self.root, "data", table,
-                                f"base-{manifest.snapshot_id}")
-
+        base = f"_envelope/base-{manifest.snapshot_id}"
         live = self._live_marks(manifest)
         if live is not None:
             live = live.persist()
         try:
             rows = {t: self._visible(manifest, t,
                                      None if t in APPEND_TABLES else live)
-                    for t in ENVELOPE_TABLES if manifest.tables.get(t)}
+                    for t in ALL_TABLES if manifest.tables.get(t)}
             types = {t: r.drop(SEQ).schema for t, r in rows.items()}
             if rows:
                 # each table's rows back in envelope shape (its own struct,
@@ -372,37 +374,39 @@ class SnapshotParquetSink:
                         (F.struct(*types[u].fieldNames()) if u == t
                          else F.lit(None).cast(types[u])).alias(u)
                         for u in types], SEQ,
-                        bucket_expr(self.n_buckets).alias("_bucket"))
+                        (F.lit(0) if t == "lineage"
+                         else bucket_expr(self.n_buckets)).alias("_bucket"))
                     for t, r in rows.items()])
                 # folds cover the FULL live key set: a fixed small partition
                 # count would write quarter-billion-row tasks at 10^9 keys
                 envelope.repartition(min(self.n_buckets, 32), "_bucket") \
                     .drop("_bucket") \
-                    .write.mode("overwrite").parquet(_base_dir("_envelope"))
+                    .write.mode("overwrite").parquet(self.data_path(base))
         finally:
             if live is not None:
                 live.unpersist()
-        folded = {t: [{"dir": _base_dir("_envelope"), "table": t}]
-                  for t in rows}
-        lineage = self._read_dirs(manifest.tables.get("lineage", []),
-                                  manifest.schemas.get("lineage"))
-        if lineage is not None:  # a few rows per batch: one file
-            lineage.coalesce(1).write.mode("overwrite") \
-                .parquet(_base_dir("lineage"))
-            folded["lineage"] = [_base_dir("lineage")]
         return dataclasses.replace(
-            manifest, tables={**manifest.tables, **folded}, delta_depth=0)
+            manifest, tables={**manifest.tables, **{t: [base] for t in rows}},
+            delta_depth=0)
 
-    @staticmethod
-    def _write_local_parquet(path: str, rows: list[dict], spark_schema) -> None:
+    def _write_local_envelope(self, name: str, table: str, rows: list[dict],
+                              row_schema: StructType, seq: int) -> None:
+        """Local ``rows`` of ``table`` as data dir ``name``'s one parquet
+        file, in envelope shape (struct ``table``, top-level ``_seq``)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(spark_schema)
-        cols = {f.name: [r.get(f.name) for r in rows] for f in spark_schema.fields}
-        table = pa.Table.from_pydict(cols, schema=arrow_schema)
-        pq.write_table(table, path)
+        schema = StructType([StructField("record_type", StringType()),
+                             StructField(table, row_schema),
+                             StructField(SEQ, LongType(), False)])
+        cols = {"record_type": [table] * len(rows),
+                table: [{f.name: r.get(f.name) for f in row_schema.fields}
+                        for r in rows],
+                SEQ: [seq] * len(rows)}
+        os.makedirs(self.data_path(name), exist_ok=True)
+        pq.write_table(pa.Table.from_pydict(cols, to_arrow_schema(schema)),
+                       os.path.join(self.data_path(name), "part-0.parquet"))
 
     def manifests_df(self) -> DataFrame:
         """The commit-manifest journal as a DataFrame (control-table view:
@@ -455,37 +459,31 @@ class SnapshotParquetSink:
         return int(tail) if tail.isdigit() else None
 
     def vacuum(self, quiesced: bool = False) -> int:
-        """Remove data directories not referenced by the current manifest
-        (orphans from crashed commits or superseded snapshots).
+        """Remove the data dirs under ``<root>/data/<table>/`` that the
+        current manifest does not name (orphans from crashed commits or
+        superseded snapshots).
 
         Dirs whose commit id EXCEEDS the current snapshot id are in-flight —
-        an active replay/stream writes data/.../snap-N (and the envelope
-        batch-N) BEFORE flipping CURRENT to N, so a concurrent vacuum must
-        skip them or the subsequent commit registers deleted data (ADVICE
-        r2: manifest permanently referencing a missing envelope dir).
+        an active replay/stream writes ``_envelope/batch-N`` and
+        ``lineage/snap-N`` BEFORE flipping CURRENT to N, so a concurrent
+        vacuum must skip them or the subsequent commit registers deleted
+        data (ADVICE r2: manifest permanently referencing a missing
+        envelope dir).
         Pass ``quiesced=True`` only when no writer is active: it also
         collects above-CURRENT orphans (abandoned crashed commits)."""
         manifest = self.read_manifest()
         current = (float("inf") if quiesced
                    else (manifest.snapshot_id if manifest else 0))
-        live: set[str] = set()
-        if manifest:
-            for dirs in manifest.tables.values():
-                for d in dirs:
-                    path = d if isinstance(d, str) else d["dir"]
-                    live.add(os.path.normpath(path))
+        live = {d for dirs in manifest.tables.values() for d in dirs} \
+            if manifest else set()
         removed = 0
-        data_root = os.path.join(self.root, "data")
-        for table in list(ALL_TABLES) + ["_envelope"]:
-            tdir = os.path.join(data_root, table)
-            if not os.path.isdir(tdir):
-                continue
-            for snap in os.listdir(tdir):
-                sdir = os.path.join(tdir, snap)
+        for table in os.listdir(self.data_path("")):
+            for snap in os.listdir(self.data_path(table)):
+                name = f"{table}/{snap}"
                 cid = self._dir_commit_id(snap)
                 if cid is not None and cid > current:
                     continue  # in-flight commit
-                if os.path.normpath(sdir) not in live:
-                    shutil.rmtree(sdir, ignore_errors=True)
+                if name not in live:
+                    shutil.rmtree(self.data_path(name), ignore_errors=True)
                     removed += 1
         return removed

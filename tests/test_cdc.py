@@ -116,8 +116,7 @@ class TestReplay:
             eng.apply_batch(batch.coalesce(1), batch_id=1, offset_lo=0, offset_hi=0)
             # the snapshot journal (rows and tombstones) holds one U row
             manifest = eng.sink.read_manifest()
-            journal = eng.sink._read_dirs(manifest.tables["snapshot"],
-                                          manifest.schemas["snapshot"],
+            journal = eng.sink._read_dirs(manifest, "snapshot",
                                           tombstones=True)
             seen.append([(r["commit"], r["_delete"]) for r in journal.collect()])
             assert [r["commit"] for r in eng.table("snapshot").collect()] == ["c0"]
@@ -276,16 +275,16 @@ class TestReplay:
         assert eng.table("failures").count() == 0
 
 
-def _snapshot_envelope(spark, sink_dir, batch_id, rows, ddl):
+def _snapshot_envelope(spark, sink, batch_id, rows, ddl):
     """An envelope-shaped snapshot delta, as the engine writes one:
     record_type 'snapshot', the rows in struct ``snapshot``, a top-level
     ``_seq``."""
-    import os
     df = spark.createDataFrame(rows, ddl)
-    d = os.path.join(sink_dir, "data", "_envelope", f"batch-{batch_id}")
+    d = sink.batch_dir(batch_id)
     df.select(F.lit("snapshot").alias("record_type"),
               F.struct(*df.columns).alias("snapshot"),
-              F.lit(batch_id).cast("long").alias("_seq")).write.parquet(d)
+              F.lit(batch_id).cast("long").alias("_seq")) \
+        .write.parquet(sink.data_path(d))
     return EnvelopedDir(d, df.schema)
 
 
@@ -293,13 +292,13 @@ class TestSchemaEvolution:
     def test_additive_column_mid_replay(self, spark, sink_dir):
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
         base = _snapshot_envelope(
-            spark, sink_dir, 1, [("r1", "p1", "c", "txt", "sha", 0)],
+            spark, sink, 1, [("r1", "p1", "c", "txt", "sha", 0)],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long",
         )
         sink.commit(1, 0, 0, {"snapshot": base})
         evolved = _snapshot_envelope(
-            spark, sink_dir, 2, [("r1", "p2", "c", "txt", "sha2", 1, "new")],
+            spark, sink, 2, [("r1", "p2", "c", "txt", "sha2", 1, "new")],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long, extra_col string",
         )
@@ -312,10 +311,10 @@ class TestSchemaEvolution:
 
     def test_type_change_rejected(self, spark, sink_dir):
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
-        base = _snapshot_envelope(spark, sink_dir, 1, [("r1", "p1", 1)],
+        base = _snapshot_envelope(spark, sink, 1, [("r1", "p1", 1)],
                                   "repo string, path string, v long")
         sink.commit(1, 0, 0, {"snapshot": base})
-        bad = _snapshot_envelope(spark, sink_dir, 2, [("r1", "p1", "oops")],
+        bad = _snapshot_envelope(spark, sink, 2, [("r1", "p1", "oops")],
                                  "repo string, path string, v string")
         with pytest.raises(Exception, match="unsafe schema evolution"):
             sink.commit(2, 1, 1, {"snapshot": bad})
@@ -434,7 +433,7 @@ class TestVacuumAndCrash:
         inflight = [
             os.path.join(sink_dir, "data", "_envelope",
                          f"batch-{current + 1}", "record_type=message"),
-            os.path.join(sink_dir, "data", "snapshot", f"snap-{current + 1}"),
+            os.path.join(sink_dir, "data", "lineage", f"snap-{current + 1}"),
         ]
         for d in inflight:
             os.makedirs(d, exist_ok=True)
@@ -521,8 +520,7 @@ class TestEnvelopeDeltas:
         eng.replay(_events_df(spark), batch_size=10_000)  # single delta, no fold
         manifest = eng.sink.read_manifest()
         entries = manifest.tables["messages"]
-        assert any(isinstance(e, dict) and e.get("table") == "messages"
-                   for e in entries)
+        assert entries == ["_envelope/batch-1"]
         msgs = eng.table("messages")
         assert msgs.count() > 0
         assert "_seq" not in msgs.columns
@@ -533,7 +531,6 @@ class TestReadFrames:
     read frame touches no parquet footer and runs no Spark job."""
 
     def test_read_frame_builds_without_jobs(self, spark, tmp_path):
-        import os
         sink = SnapshotParquetSink(spark, str(tmp_path / "sink"), n_buckets=8,
                                    compact_every=2)
         eng = CdcEngine(spark, sink)
@@ -541,10 +538,8 @@ class TestReadFrames:
         manifest = sink.read_manifest()
         # one fold (batch 2), then one envelope delta on top of the bases
         assert manifest.delta_depth == 1
-        assert manifest.tables["messages"][0] == {
-            "dir": os.path.join(sink.root, "data", "_envelope", "base-2"),
-            "table": "messages"}
-        assert any(isinstance(e, dict) for e in manifest.tables["messages"])
+        assert manifest.tables["messages"][0] == "_envelope/base-2"
+        assert manifest.tables["messages"][1:] == ["_envelope/batch-3"]
 
         sc, group = spark.sparkContext, "test-read-frame-builds"
         sc.setJobGroup(group, "build read_table frames")

@@ -125,15 +125,16 @@ def _tables(sink):
 
 def _assert_folded_marks(sink):
     """A fold leaves every table, the snapshot journal included, as one
-    base entry: one snapshot row per key, and every row live (no tombstone
-    or deleted key survives)."""
+    entry, the one envelope base all six share: one snapshot row per key,
+    and every row live (no tombstone or deleted key survives)."""
     manifest = sink.read_manifest()
     assert manifest.delta_depth == 0
     assert len(manifest.tables["snapshot"]) == 1
     assert {t: len(e) for t, e in manifest.tables.items()} == \
         dict.fromkeys(ALL_TABLES, 1)
-    base = sink._read_dirs(manifest.tables["snapshot"],
-                           manifest.schemas["snapshot"], tombstones=True)
+    assert manifest.tables == dict.fromkeys(
+        ALL_TABLES, [f"_envelope/base-{manifest.snapshot_id}"])
+    base = sink._read_dirs(manifest, "snapshot", tombstones=True)
     assert base.count() == base.select("repo", "path").distinct().count()
     assert base.count() == sink.read_table("snapshot").count()
     assert base.filter(TOMBSTONE).count() == 0
@@ -223,13 +224,13 @@ class TestKillPoints:
                                 else replace(src, dst))
             evidence = os.path.join(root, "manifests",
                                     f"manifest-{kill}.json")
-        else:  # the envelope base is written, lineage not yet folded
+        else:  # the batch's deltas are written, the fold's one write dies
             parquet = DataFrameWriter.parquet
             monkeypatch.setattr(
                 DataFrameWriter, "parquet", lambda self, path, *a, **kw:
-                _crash() if path.endswith(os.path.join("lineage", f"base-{kill}"))
+                _crash() if path.endswith(os.path.join("_envelope", f"base-{kill}"))
                 else parquet(self, path, *a, **kw))
-            evidence = os.path.join(root, "data", "_envelope", f"base-{kill}")
+            evidence = os.path.join(root, "data", "lineage", f"snap-{kill}")
         with pytest.raises(_Crash):
             CdcEngine(spark, _kill_sink(spark, root)).replay(
                 events, batch_size=batch_size)
@@ -238,10 +239,30 @@ class TestKillPoints:
         assert os.path.exists(evidence)
         if boundary == "mid_fold":
             assert not os.path.exists(
-                os.path.join(root, "data", "lineage", f"base-{kill}"))
+                os.path.join(root, "manifests", f"manifest-{kill}.json"))
 
         resumed = _kill_sink(spark, root)
         CdcEngine(spark, resumed).replay(events, batch_size=batch_size)
         resumed.vacuum()
         assert resumed.current_snapshot_id() == n_batches
         assert _tables(resumed) == uninterrupted[1]
+
+
+class TestCopiedSink:
+    """Manifests name data dirs relative to the sink root, so a copied
+    sink reads and vacuums its own files, not the original's."""
+
+    def test_copy_outlives_original(self, spark, tmp_path, uninterrupted):
+        original, copy = tmp_path / "original", tmp_path / "copy"
+        shutil.copytree(uninterrupted[0].root, original)  # a folded sink
+        shutil.copytree(original, copy)
+        sink = _kill_sink(spark, str(copy))
+        sink.vacuum()
+        manifest = sink.read_manifest()
+        assert os.path.isdir(os.path.join(
+            copy, "data", "_envelope", f"base-{manifest.snapshot_id}"))
+        for dirs in manifest.tables.values():
+            for d in dirs:
+                assert os.path.isdir(os.path.join(copy, "data", d)), d
+        shutil.rmtree(original)
+        assert _tables(sink) == uninterrupted[1]

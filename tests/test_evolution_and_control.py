@@ -1,8 +1,6 @@
 """Engine-level schema evolution (mid-replay additive column — north rule)
 and the control-table surface."""
 
-import os
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -29,12 +27,11 @@ class _EngineV2(CdcEngine):
             # inside the envelope (EnvelopedDir); a v2 writes its own
             # envelope dir whose snapshot struct gains a column
             snap = kw["tables"]["snapshot"]
-            v2_dir = os.path.join(self.sink.root, "data", "_envelope",
-                                  f"v2-{batch_id}")
-            self.spark.read.parquet(snap.dir).withColumn(
+            v2_dir = f"_envelope/v2-{batch_id}"
+            self.spark.read.parquet(self.sink.data_path(snap.dir)).withColumn(
                 "snapshot", F.col("snapshot").withField(
                     "content_length", F.lit(batch_id * 1000).cast("long"))
-            ).write.parquet(v2_dir)
+            ).write.parquet(self.sink.data_path(v2_dir))
             # a fresh StructType: StructType.add would mutate schemas.SNAPSHOT
             v2_schema = StructType(
                 list(snap.schema.fields)
@@ -62,8 +59,7 @@ class TestEngineSchemaEvolution:
         # the snapshot delta holds only snapshot rows — no envelope row of
         # another table leaks in as a null-key row
         manifest = sink.read_manifest()
-        deltas = sink._read_dirs(manifest.tables["snapshot"],
-                                 manifest.schemas["snapshot"])
+        deltas = sink._read_dirs(manifest, "snapshot")
         assert deltas.filter(F.col("repo").isNull()).count() == 0
         snap = v2.table("snapshot")
         assert "content_length" in snap.columns
