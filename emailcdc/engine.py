@@ -3,9 +3,9 @@
 The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
 
     events → [offset-range batch] → winners + lineage aggregate → semi-join →
-    skew-aware salted repartition → mapInArrow extraction → MOR commit
-    (envelope delta with delete tombstones, periodic compaction fold) →
-    lineage/metrics rows
+    skew-aware salted repartition → mapInArrow extraction ∪ lineage rows →
+    ONE envelope write (every table's delta, delete tombstones included) →
+    MOR commit (manifest only; periodic compaction fold)
 
 Input contract: ``(repo, path, offset)`` is unique in the log.  A batch's
 winner per key is its event with the largest ``(offset, op)`` — two events
@@ -38,8 +38,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import schemas
 from .extract import validate_missing_field_config
@@ -47,6 +49,8 @@ from .sink import EnvelopedDir, SnapshotParquetSink
 from .udfs import ENVELOPE_TABLES, extract_envelope
 
 KEY = ["repo", "path"]
+# every table's row schema: the extraction envelope's five, then lineage
+TABLES = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}
 # hot-repo salting: a repo holding more than max(HOT_REPO_MIN_EVENTS,
 # HOT_REPO_FRACTION × batch events) events is spread over SALTS partitions
 SALTS = 8
@@ -223,15 +227,24 @@ class CdcEngine:
 
             # --- extraction (the payload) ---------------------------------------
             # The envelope is parsed ONCE and written to parquet — and that
-            # write IS the delta commit for every envelope table: the sink
-            # registers the dir directly as each table's delta
-            # (EnvelopedDir), so the multi-KB payload hits disk exactly once
-            # per batch.  A crashed commit leaves only an orphan envelope
-            # dir; vacuum() removes it.
+            # write IS the delta of every table: the sink registers the dir
+            # directly as each table's delta (EnvelopedDir), so the
+            # multi-KB payload hits disk exactly once per batch and the
+            # commit writes only its manifest.  The lineage rows, already
+            # on the driver, join the envelope as an Arrow LocalRelation
+            # (no Python RDD, no job of its own) in ONE partition, so they
+            # add one file, not one per row.  A crashed commit leaves only
+            # an orphan envelope dir; vacuum() removes it.
+            lineage = self.spark.createDataFrame(pa.Table.from_pylist(
+                lineage_rows, to_arrow_schema(schemas.LINEAGE))).coalesce(1)
             envelope = extract_envelope(
                 salted, self.error_strategy,
                 self.missing_field_strategy, self.missing_field_substitution,
                 folder_expression=self.folder_expression
+            ).unionByName(
+                lineage.select(F.lit("lineage").alias("record_type"),
+                               F.struct(*lineage.columns).alias("lineage")),
+                allowMissingColumns=True,
             ).withColumn("_seq", F.lit(batch_id).cast("long"))
             stage_dir = self.sink.batch_dir(batch_id)
             # FLAT write — record_type stays a data column.  partitionBy
@@ -245,7 +258,7 @@ class CdcEngine:
             obs = Observation()
             observed = envelope.observe(obs, *[
                 F.count(F.when(F.col("record_type") == t, 1)).alias(t)
-                for t in ENVELOPE_TABLES])
+                for t in TABLES])
             observed.write.mode("overwrite").parquet(
                 self.sink.data_path(stage_dir))
             type_counts = obs.get
@@ -261,13 +274,11 @@ class CdcEngine:
             # register the envelope dir (zero-copy).  The snapshot rows and
             # the delete tombstones — the sink's key-visibility journal —
             # ride the envelope too (one per winner, sha256 computed in the
-            # extract worker), so no table write happens at commit time on
-            # the non-folding path at all.
-            tables: dict = {t: EnvelopedDir(stage_dir, schema)
-                            for t, schema in ENVELOPE_TABLES.items()
-                            if type_counts[t] > 0
-                            or (t == "snapshot" and delete_count > 0)}
-            tables["lineage"] = (lineage_rows, schemas.LINEAGE)
+            # extract worker).
+            tables = {t: EnvelopedDir(stage_dir, schema)
+                      for t, schema in TABLES.items()
+                      if type_counts[t] > 0
+                      or (t == "snapshot" and delete_count > 0)}
             self.sink.commit(
                 batch_id=batch_id,
                 offset_lo=offset_lo,
@@ -319,5 +330,4 @@ class CdcEngine:
         df = self.sink.read_table(name)
         if df is not None:
             return df
-        schema = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}[name]
-        return self.spark.createDataFrame([], schema)
+        return self.spark.createDataFrame([], TABLES[name])

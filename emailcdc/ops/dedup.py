@@ -18,22 +18,11 @@ Scale design:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 # --- exact -------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
-    """Keep the lowest-id row per exact content hash (hash-groupBy dedup)."""
-    digest = F.sha2(F.concat_ws("\x1f", *cols), 256)
-    w = Window.partitionBy(digest).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
 
 def exact_dup_groups(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     """Duplicate clusters: content hash → count + keeper id (SQL-oracle
@@ -92,18 +81,6 @@ def _minhash_batch(texts, n_hashes: int, shingle_n: int, seed: int = 42):
             sig = (base[:, None] * A[None, :] + B[None, :]).min(axis=0)
             out.append(sig.astype(np.int64).tolist())
     return out
-
-
-def minhash_signature(col, n_hashes: int = 64, shingle_n: int = 5) -> Column:
-    """n_hashes-wide MinHash signature over word shingles (Arrow-batched
-    numpy — see ``_minhash_batch``)."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(_minhash_batch(texts, n_hashes, shingle_n))
-
-    return _udf(F.col(col) if isinstance(col, str) else col)
 
 
 def minhash_band_buckets(col, n_hashes: int = 64, bands: int = 16,
@@ -332,19 +309,6 @@ def simhash_chunks(col, n_chunks: int = 4, bits: int = 60) -> Column:
         return pd.Series(_simhash_chunks_batch(texts, n_chunks, bits))
 
     return _udf(F.col(col) if isinstance(col, str) else col)
-
-
-def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
-                       n_chunks: int = 4,
-                       max_bucket: int | None = 1000) -> DataFrame:
-    """Candidate pairs sharing ≥1 SimHash chunk (guaranteed recall for
-    hamming distance < n_chunks by pigeonhole).  ``max_bucket`` caps
-    degenerate chunk buckets (see _bucket_pairs)."""
-    ch = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(simhash_chunks(text_col, n_chunks)).alias("chunk_idx", "chunk_val"),
-    )
-    return _bucket_pairs(ch, ["chunk_idx", "chunk_val"], max_bucket)
 
 
 # --- embedding near-dup -----------------------------------------------------------

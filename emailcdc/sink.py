@@ -9,9 +9,9 @@ MOR — chosen over copy-on-write because a WAL tail whose keys spread over
 the whole key space would otherwise rewrite the entire sink every batch):
 
 - **Append-only delta commits.**  A batch commit registers, per table,
-  one immutable delta of new rows stamped with ``_seq = batch_id`` —
-  usually the engine's envelope dir, so it writes no table data at all.
-  A commit reads NOTHING — O(batch), not O(sink).
+  one immutable delta of new rows stamped with ``_seq = batch_id``: the
+  envelope dir the engine already wrote, so a commit writes only its
+  manifest.  A commit reads NOTHING — O(batch), not O(sink).
 - **One data-dir format.**  Every data dir is envelope-shaped
   (``record_type``, one struct column per table, a top-level ``_seq``),
   and manifests name dirs relative to ``<root>/data`` — so a copied or
@@ -77,12 +77,13 @@ def bucket_expr(n_buckets: int):
 
 @dataclass
 class EnvelopedDir:
-    """A table's delta handed to ``commit`` as data ALREADY ON DISK: the
-    envelope-shaped data dir named ``dir`` (relative to ``<root>/data``,
-    e.g. the sink's ``batch_dir``).  The commit registers ``dir`` as the
-    table's manifest entry and writes nothing for the table (zero-copy
-    delta).  ``schema`` is the table's row schema, known statically, so
-    commit-time schema checks and reads need no footers."""
+    """A table's delta, the only form ``commit`` takes: data ALREADY ON
+    DISK in the envelope-shaped data dir named ``dir`` (relative to
+    ``<root>/data``, e.g. the sink's ``batch_dir``; one dir holds every
+    table's rows of a batch).  The commit registers ``dir`` as the table's
+    manifest entry and writes nothing for the table (zero-copy delta).
+    ``schema`` is the table's row schema, known statically, so commit-time
+    schema checks and reads need no footers."""
     dir: str
     schema: StructType
 
@@ -277,22 +278,20 @@ class SnapshotParquetSink:
         batch_id: int,
         offset_lo: int,
         offset_hi: int,
-        tables: dict,
+        tables: dict[str, EnvelopedDir],
         stats: dict | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
     ) -> Manifest:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
-        ``tables[t]`` is table ``t``'s delta: an EnvelopedDir for an
-        envelope table, local ``(rows, schema)`` for ``lineage`` (written
-        in envelope shape to ``lineage/snap-<id>``).  Rows of
-        a keyed table replace ALL existing rows for their key (visibility
-        via the snapshot journal: the snapshot delta must hold one row or
-        tombstone per key the batch touched); rows of an append table add
-        to it.  Commits write only local rows; the commit that brings the
-        delta depth to ``compact_every`` then folds the sink into base
-        files (``_fold``).
+        ``tables[t]`` is table ``t``'s delta, an EnvelopedDir; a table
+        with no entry gets no delta.  Rows of a keyed table replace ALL
+        existing rows for their key (visibility via the snapshot journal:
+        the snapshot delta must hold one row or tombstone per key the batch
+        touched); rows of an append table add to it.  A commit writes only
+        its manifest and CURRENT; the commit that brings the delta depth to
+        ``compact_every`` first folds the sink into one base (``_fold``).
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
@@ -300,28 +299,20 @@ class SnapshotParquetSink:
         new_tables: dict[str, list] = {}
         new_schemas: dict[str, str] = {}
 
-        # Each table's delta.  An EnvelopedDir is registered as it is
-        # (zero-copy); local rows become one envelope-shaped parquet file.
+        # Each table's delta is registered as it is (zero-copy).
         for table in ALL_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
             prev_schema = prev.schemas.get(table) if prev else None
             new_tables[table] = prev_dirs
             if prev_schema:
                 new_schemas[table] = prev_schema
-            val = tables.get(table)
-            if val is None or (isinstance(val, tuple) and not val[0]):
+            delta = tables.get(table)
+            if delta is None:
                 continue
-            if isinstance(val, EnvelopedDir):
-                entry, schema = val.dir, val.schema
-            else:
-                entry = f"{table}/snap-{snapshot_id}"
-                row_list, schema = val
-                self._write_local_envelope(entry, table, row_list, schema,
-                                           batch_id)
-            schema = StructType(schema.fields
+            schema = StructType(delta.schema.fields
                                 + [StructField(SEQ, LongType(), False)])
             self._check_schema(prev_schema, schema)
-            new_tables[table] = prev_dirs + [entry]
+            new_tables[table] = prev_dirs + [delta.dir]
             new_schemas[table] = self._merged_schema_json(prev_schema, schema)
 
         manifest = Manifest(
@@ -389,25 +380,6 @@ class SnapshotParquetSink:
             manifest, tables={**manifest.tables, **{t: [base] for t in rows}},
             delta_depth=0)
 
-    def _write_local_envelope(self, name: str, table: str, rows: list[dict],
-                              row_schema: StructType, seq: int) -> None:
-        """Local ``rows`` of ``table`` as data dir ``name``'s one parquet
-        file, in envelope shape (struct ``table``, top-level ``_seq``)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = StructType([StructField("record_type", StringType()),
-                             StructField(table, row_schema),
-                             StructField(SEQ, LongType(), False)])
-        cols = {"record_type": [table] * len(rows),
-                table: [{f.name: r.get(f.name) for f in row_schema.fields}
-                        for r in rows],
-                SEQ: [seq] * len(rows)}
-        os.makedirs(self.data_path(name), exist_ok=True)
-        pq.write_table(pa.Table.from_pydict(cols, to_arrow_schema(schema)),
-                       os.path.join(self.data_path(name), "part-0.parquet"))
-
     def manifests_df(self) -> DataFrame:
         """The commit-manifest journal as a DataFrame (control-table view:
         batch ids, offset ranges, per-batch stats — north rule's metrics).
@@ -454,21 +426,21 @@ class SnapshotParquetSink:
 
     @staticmethod
     def _dir_commit_id(name: str) -> int | None:
-        """Trailing commit id of a data dir name (``snap-N``/``base-N``/``batch-N``)."""
+        """Trailing commit id of a data dir name (``batch-N``/``base-N``)."""
         tail = name.rsplit("-", 1)[-1]
         return int(tail) if tail.isdigit() else None
 
     def vacuum(self, quiesced: bool = False) -> int:
-        """Remove the data dirs under ``<root>/data/<table>/`` that the
-        current manifest does not name (orphans from crashed commits or
-        superseded snapshots).
+        """Remove the data dirs ``<root>/data/<group>/<dir>`` (in practice
+        ``_envelope/batch-N`` and ``_envelope/base-N``) that the current
+        manifest does not name (orphans from crashed commits or superseded
+        snapshots).
 
         Dirs whose commit id EXCEEDS the current snapshot id are in-flight —
-        an active replay/stream writes ``_envelope/batch-N`` and
-        ``lineage/snap-N`` BEFORE flipping CURRENT to N, so a concurrent
-        vacuum must skip them or the subsequent commit registers deleted
-        data (ADVICE r2: manifest permanently referencing a missing
-        envelope dir).
+        an active replay/stream writes ``_envelope/batch-N`` BEFORE
+        flipping CURRENT to N, so a concurrent vacuum must skip them or the
+        subsequent commit registers deleted data (ADVICE r2: manifest
+        permanently referencing a missing envelope dir).
         Pass ``quiesced=True`` only when no writer is active: it also
         collects above-CURRENT orphans (abandoned crashed commits)."""
         manifest = self.read_manifest()

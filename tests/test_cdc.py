@@ -15,7 +15,6 @@ from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import make_change_events, make_eml, expected_final_state
 from emailcdc.sink import ALL_TABLES, EnvelopedDir, SnapshotParquetSink
-from emailcdc.udfs import ENVELOPE_TABLES
 
 
 EVENTS = make_change_events(30)
@@ -241,8 +240,9 @@ class TestReplay:
         assert stats["upsert_count"] + stats["delete_count"] == len(EVENTS)
         assert manifest.offset_lo == 0
         type_counts = stats["type_counts"]
-        assert set(type_counts) == set(ENVELOPE_TABLES)
+        assert set(type_counts) == set(ALL_TABLES)
         assert type_counts["snapshot"] == len(EXPECTED)
+        assert type_counts["lineage"] == eng.table("lineage").count()
         # streaming path: no offsets given, the manifest records the
         # batch's own offset bounds.  The batch re-inserts the key deleted
         # at offset 36, so it holds two raw deletes but one winning delete.
@@ -424,22 +424,17 @@ class TestVacuumAndCrash:
 
     def test_vacuum_skips_in_flight_commit_dirs(self, spark, sink_dir):
         """ADVICE r2: a vacuum racing an active replay must not delete the
-        envelope/snap dirs of the commit being written (id > CURRENT) —
+        envelope dir of the commit being written (id > CURRENT) —
         the commit would register deleted data."""
         import os
         eng = _engine(spark, sink_dir)
         eng.replay(_events_df(spark), batch_size=10_000)
         current = eng.sink.current_snapshot_id()
-        inflight = [
-            os.path.join(sink_dir, "data", "_envelope",
-                         f"batch-{current + 1}", "record_type=message"),
-            os.path.join(sink_dir, "data", "lineage", f"snap-{current + 1}"),
-        ]
-        for d in inflight:
-            os.makedirs(d, exist_ok=True)
+        inflight = os.path.join(sink_dir, "data", "_envelope",
+                                f"batch-{current + 1}", "record_type=message")
+        os.makedirs(inflight, exist_ok=True)
         eng.sink.vacuum()
-        for d in inflight:
-            assert os.path.isdir(d), d
+        assert os.path.isdir(inflight)
 
 
 class TestBroadcastGuard:
@@ -524,6 +519,35 @@ class TestEnvelopeDeltas:
         msgs = eng.table("messages")
         assert msgs.count() > 0
         assert "_seq" not in msgs.columns
+
+    def test_commit_writes_only_its_manifest(self, spark, tmp_path,
+                                             monkeypatch):
+        """Every table's delta, lineage included, rides the batch's one
+        envelope write: a non-folding commit adds no file under data/."""
+        import os
+        sink_dir = str(tmp_path / "sink")
+        data = os.path.join(sink_dir, "data")
+        eng = _engine(spark, sink_dir)  # compact_every=8: no fold
+
+        def files():
+            return {os.path.join(d, f)
+                    for d, _, fs in os.walk(data) for f in fs}
+
+        commit, added = eng.sink.commit, []
+
+        def spy(*args, **kwargs):
+            before = files()
+            manifest = commit(*args, **kwargs)
+            added.append(files() - before)
+            return manifest
+
+        monkeypatch.setattr(eng.sink, "commit", spy)
+        eng.replay(_events_df(spark), batch_size=25)
+        assert len(added) == 3 and not any(added), added
+        assert os.listdir(data) == ["_envelope"]
+        manifest = eng.sink.read_manifest()
+        assert manifest.tables["lineage"] == [
+            f"_envelope/batch-{i}" for i in (1, 2, 3)]
 
 
 class TestReadFrames:

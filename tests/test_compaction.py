@@ -230,7 +230,8 @@ class TestKillPoints:
                 DataFrameWriter, "parquet", lambda self, path, *a, **kw:
                 _crash() if path.endswith(os.path.join("_envelope", f"base-{kill}"))
                 else parquet(self, path, *a, **kw))
-            evidence = os.path.join(root, "data", "lineage", f"snap-{kill}")
+            evidence = os.path.join(root, "data", "_envelope",
+                                    f"batch-{kill}")
         with pytest.raises(_Crash):
             CdcEngine(spark, _kill_sink(spark, root)).replay(
                 events, batch_size=batch_size)
@@ -240,6 +241,10 @@ class TestKillPoints:
         if boundary == "mid_fold":
             assert not os.path.exists(
                 os.path.join(root, "manifests", f"manifest-{kill}.json"))
+            # the batch's lineage rows rode its one envelope write
+            lineage = spark.read.parquet(evidence) \
+                .filter("record_type = 'lineage'").select("lineage.*")
+            assert {r["batch_id"] for r in lineage.collect()} == {kill}
 
         resumed = _kill_sink(spark, root)
         CdcEngine(spark, resumed).replay(events, batch_size=batch_size)
