@@ -5,7 +5,8 @@ The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
     events → [offset-range batch] → winners + lineage aggregate → semi-join →
     skew-aware salted repartition → mapInArrow extraction ∪ lineage rows →
     ONE envelope write (every table's delta, delete tombstones included) →
-    MOR commit (manifest only; periodic compaction fold)
+    MOR commit (the dir appended to the manifest's log; periodic one-scan
+    compaction fold)
 
 Input contract: ``(repo, path, offset)`` is unique in the log.  A batch's
 winner per key is its event with the largest ``(offset, op)`` — two events
@@ -45,7 +46,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import schemas
 from .extract import validate_missing_field_config
-from .sink import EnvelopedDir, SnapshotParquetSink
+from .sink import SnapshotParquetSink
 from .udfs import ENVELOPE_TABLES, extract_envelope
 
 KEY = ["repo", "path"]
@@ -227,14 +228,13 @@ class CdcEngine:
 
             # --- extraction (the payload) ---------------------------------------
             # The envelope is parsed ONCE and written to parquet — and that
-            # write IS the delta of every table: the sink registers the dir
-            # directly as each table's delta (EnvelopedDir), so the
-            # multi-KB payload hits disk exactly once per batch and the
-            # commit writes only its manifest.  The lineage rows, already
-            # on the driver, join the envelope as an Arrow LocalRelation
-            # (no Python RDD, no job of its own) in ONE partition, so they
-            # add one file, not one per row.  A crashed commit leaves only
-            # an orphan envelope dir; vacuum() removes it.
+            # write IS the delta of every table: the sink appends the dir
+            # to its log as it is, so the multi-KB payload hits disk exactly
+            # once per batch and the commit writes only its manifest.  The
+            # lineage rows, already on the driver, join the envelope as an
+            # Arrow LocalRelation (no Python RDD, no job of its own) in ONE
+            # partition, so they add one file, not one per row.  A crashed
+            # commit leaves only an orphan envelope dir; vacuum() removes it.
             lineage = self.spark.createDataFrame(pa.Table.from_pylist(
                 lineage_rows, to_arrow_schema(schemas.LINEAGE))).coalesce(1)
             envelope = extract_envelope(
@@ -270,20 +270,16 @@ class CdcEngine:
                 "hot_repos": hot_repos,
                 "type_counts": type_counts,
             }
-            # a table with no rows in this batch gets no delta; the rest
-            # register the envelope dir (zero-copy).  The snapshot rows and
-            # the delete tombstones — the sink's key-visibility journal —
-            # ride the envelope too (one per winner, sha256 computed in the
-            # extract worker).
-            tables = {t: EnvelopedDir(stage_dir, schema)
-                      for t, schema in TABLES.items()
-                      if type_counts[t] > 0
-                      or (t == "snapshot" and delete_count > 0)}
+            # the envelope dir is every table's delta: the snapshot rows
+            # and the delete tombstones — the sink's key-visibility journal
+            # — ride it too (one per winner, sha256 computed in the extract
+            # worker)
             self.sink.commit(
                 batch_id=batch_id,
                 offset_lo=offset_lo,
                 offset_hi=offset_hi,
-                tables=tables,
+                dir=stage_dir,
+                schemas=TABLES,
                 stats=stats,
                 epoch=epoch,
                 stream_id=stream_id,

@@ -8,36 +8,42 @@ Design (merge-on-read, like Iceberg v2 position/equality deletes or Hudi
 MOR — chosen over copy-on-write because a WAL tail whose keys spread over
 the whole key space would otherwise rewrite the entire sink every batch):
 
-- **Append-only delta commits.**  A batch commit registers, per table,
-  one immutable delta of new rows stamped with ``_seq = batch_id``: the
-  envelope dir the engine already wrote, so a commit writes only its
-  manifest.  A commit reads NOTHING — O(batch), not O(sink).
+- **Append-only delta commits.**  A batch commit appends one immutable
+  delta to the manifest's one list of dirs: the envelope dir the engine
+  already wrote, every table's rows of the batch stamped with
+  ``_seq = batch_id``, so a commit writes only its manifest.  A commit
+  reads NOTHING — O(batch), not O(sink).
 - **One data-dir format.**  Every data dir is envelope-shaped
   (``record_type``, one struct column per table, a top-level ``_seq``),
   and manifests name dirs relative to ``<root>/data`` — so a copied or
-  moved sink reads and vacuums only its own files.
-- **The snapshot table is the visibility journal.**  Like Iceberg v2,
-  where data rows carry their sequence number and only deletes get extra
-  records, every key the batch touched has one snapshot row: an upsert's
-  row, or a delete's *tombstone* (envelope record type ``_delete``).  A
-  key's live row is its latest snapshot row unless that is a tombstone;
-  a keyed table's row is visible iff its ``_seq`` equals the live row's.
-  All keyed tables share it (an upsert replaces ALL tables' rows for the
-  key — the reference reprocesses the whole file, SURVEY.md §2.1 K1).
+  moved sink reads and vacuums only its own files.  Reads scan every dir
+  once (``_envelope``) and pick a table's rows by ``record_type``.
+- **One visibility rule.**  Like Iceberg v2, where data rows carry their
+  sequence number and only deletes get extra records, every key the
+  batch touched has one snapshot row: an upsert's row, or a delete's
+  *tombstone* (envelope record type ``_delete``).  The journal
+  (``_live``) is one hash aggregate over those rows: per key, the latest
+  ``_seq``, unless that row is a tombstone.  A keyed table's row is
+  visible iff its ``_seq`` is its key's live ``_seq``; reads and the
+  fold share this rule.  All keyed tables share it (an upsert replaces
+  ALL tables' rows for the key — the reference reprocesses the whole
+  file, SURVEY.md §2.1 K1).
 - **Compaction is the MOR read written back.**  When the sink's delta
   depth (commits since the last fold) reaches ``compact_every``, the
-  commit registers its delta as usual and then folds every table: the
-  VISIBLE rows (``_visible``, as ``read_table``) of all five envelope
-  tables, append tables included, and all ``lineage`` rows become ONE
-  envelope base clustered on ``_bucket``.  Amortized
+  commit registers its delta as usual and then folds the log in one
+  scan: the visible keyed rows and every append row stay in envelope
+  shape and become ONE envelope base clustered on ``_bucket``, the
+  manifest's one dir.  The base holds no tombstones: it replaces every
+  dir, so no older row of a deleted key survives.  Amortized
   O(sink / compact_every) per batch, exactly Iceberg's rewrite_data_files
-  maintenance.  The base holds no tombstones: the fold rewrote every
-  table, so no older row of a deleted key survives.
+  maintenance.
 - **Manifests + atomic pointer flip.**  Each commit writes
   ``manifests/manifest-<snapshot_id>.json`` (snapshot_id == batch_id →
-  idempotent replay) and atomically replaces ``CURRENT`` (``os.replace``).
-  A crash before the flip leaves only orphan files; ``vacuum()`` removes
-  them.  Resume = read offsets off the CURRENT manifest.
+  idempotent replay) and atomically replaces ``CURRENT`` (``os.replace``),
+  fsyncing each file and then its directory.  A crash before the flip
+  leaves only orphan files; ``vacuum()`` removes them.  Resume = read
+  offsets off the CURRENT manifest.  The guarantee covers a process
+  crash, not a power loss: the envelope parquet files are not fsynced.
 - **Additive schema evolution.**  Commits diff the incoming schema against
   the manifest's recorded schema, reject type changes (Iceberg's
   safe-evolution default) and record the merge.  Reads use that schema,
@@ -51,13 +57,12 @@ Tables: ``snapshot`` (live repos state), ``messages``, ``attachments``,
 from __future__ import annotations
 
 import dataclasses
-import functools
 import json
 import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -76,27 +81,16 @@ def bucket_expr(n_buckets: int):
 
 
 @dataclass
-class EnvelopedDir:
-    """A table's delta, the only form ``commit`` takes: data ALREADY ON
-    DISK in the envelope-shaped data dir named ``dir`` (relative to
-    ``<root>/data``, e.g. the sink's ``batch_dir``; one dir holds every
-    table's rows of a batch).  The commit registers ``dir`` as the table's
-    manifest entry and writes nothing for the table (zero-copy delta).
-    ``schema`` is the table's row schema, known statically, so commit-time
-    schema checks and reads need no footers."""
-    dir: str
-    schema: StructType
-
-
-@dataclass
 class Manifest:
     snapshot_id: int
     batch_id: int
     offset_lo: int
     offset_hi: int
-    # table -> list of data dir names relative to <root>/data (each dir =
-    # one commit's delta or a fold's base), e.g. "_envelope/batch-5"
-    tables: dict = field(default_factory=dict)
+    # the log, oldest first: envelope dir names relative to <root>/data,
+    # each one commit's delta or a fold's base, e.g. "_envelope/batch-5"
+    dirs: list = field(default_factory=list)
+    # table -> its merged row schema (JSON): the tables that exist and
+    # the read schema of each one's envelope struct
     schemas: dict = field(default_factory=dict)
     stats: dict = field(default_factory=dict)
     delta_depth: int = 0  # deltas since last compaction
@@ -167,7 +161,8 @@ class SnapshotParquetSink:
 
     def _publish(self, manifest: Manifest) -> None:
         """Write the manifest, then atomically flip CURRENT to it — the
-        commit point."""
+        commit point.  Each file is fsynced before its replace and its
+        directory after it, so the rename survives a crash too."""
         for path, text in ((self._manifest_path(manifest.snapshot_id),
                             manifest.to_json()),
                            (self._current_path, str(manifest.snapshot_id))):
@@ -176,82 +171,68 @@ class SnapshotParquetSink:
                 fh.flush()
                 os.fsync(fh.fileno())
             os.replace(path + ".tmp", path)
+            fd = os.open(os.path.dirname(path), os.O_RDONLY)
+            try:
+                os.fsync(fd)
+            finally:
+                os.close(fd)
 
     # --- reads --------------------------------------------------------------
 
-    def _live_marks(self, manifest: Manifest) -> DataFrame | None:
-        """The snapshot table's live rows: the latest snapshot row per key
-        (``_seq`` included), dropped when it is a tombstone."""
-        rows = self._read_dirs(manifest, "snapshot", tombstones=True)
-        if rows is None:
-            return None
-        w = Window.partitionBy(*KEY).orderBy(F.desc(SEQ))
-        return (
-            rows.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & ~F.col(TOMBSTONE))
-            .drop("_rn", TOMBSTONE)
-        )
+    def _envelope(self, manifest: Manifest) -> DataFrame:
+        """The log at ``manifest``: every dir in one scan, read with the
+        manifest's schemas (a dir with no data files reads as no rows).
+        Each table's rows hold its columns inside struct ``table`` and
+        ``_seq`` is top-level — so parquet column pruning never decodes
+        the payload of a table a read does not select."""
+        return self.spark.read.schema(StructType(
+            [StructField("record_type", StringType())]
+            + [StructField(t, StructType.fromJson(json.loads(s)))
+               for t, s in manifest.schemas.items()]
+            + [StructField(SEQ, LongType())])
+        ).parquet(*map(self.data_path, manifest.dirs))
 
-    def _read_dirs(self, manifest: Manifest, table: str,
-                   tombstones: bool = False) -> DataFrame | None:
-        """Union ``table``'s data dirs at ``manifest``, read with its
-        manifest schema (a dir with no data files reads as no rows).  Every
-        dir is envelope-shaped: rows of record type ``table`` hold its
-        columns inside struct ``table``, ``_seq`` is top-level — so parquet
-        column pruning never decodes the other tables' payload bytes.  With
-        ``tombstones`` (snapshot only) the envelope's tombstones are read
-        too, flagged by a boolean ``_delete`` column."""
-        entries = manifest.tables.get(table)
-        if not entries:
-            return None
-        schema = StructType.fromJson(json.loads(manifest.schemas[table]))
-        row = StructType([f for f in schema.fields if f.name != SEQ])
+    @staticmethod
+    def _live(env: DataFrame) -> DataFrame:
+        """The visibility journal: ``_live_seq``, the ``_seq`` of each key's
+        latest snapshot row, for the keys where that row is not a
+        tombstone.  Packing both into ``max(_seq*2 + is_tombstone)`` makes
+        it one hash aggregate (a commit holds one row or tombstone per
+        key, so the low bit never breaks a tie)."""
         rt = F.col("record_type")
-        types = (table, TOMBSTONE) if tombstones else (table,)
-        rows = (
-            self.spark.read.schema(StructType([
-                StructField("record_type", StringType()),
-                StructField(table, row), StructField(SEQ, LongType())]))
-            .parquet(*map(self.data_path, entries))
-            .filter(rt.isin(*types))
-            .select(f"{table}.*", SEQ, (rt == TOMBSTONE).alias(TOMBSTONE)))
-        return rows if tombstones else rows.drop(TOMBSTONE)
-
-    def _visible(self, manifest: Manifest, table: str,
-                 live: DataFrame | None) -> DataFrame | None:
-        """Rows of ``table`` visible at ``manifest``: those whose ``_seq`` is
-        their key's live row's (``live`` = _live_marks, which IS the visible
-        snapshot table); all if ``live`` is None."""
-        if table == "snapshot":
-            return live
-        rows = self._read_dirs(manifest, table)
-        if rows is None or live is None:
-            return rows
         return (
-            rows.join(live.select(*KEY, F.col(SEQ).alias("_live_seq")),
-                      on=KEY, how="inner")
-            .filter(F.col(SEQ) == F.col("_live_seq"))
-            .drop("_live_seq")
+            env.filter(rt.isin("snapshot", TOMBSTONE))
+            .groupBy(*[F.col(f"snapshot.{k}").alias(k) for k in KEY])
+            .agg(F.max(F.col(SEQ) * 2 + (rt == TOMBSTONE).cast("long"))
+                 .alias("_m"))
+            .filter(F.col("_m") % 2 == 0)
+            .select(*KEY, F.shiftright("_m", 1).alias("_live_seq"))
         )
 
     def read_table(self, table: str) -> DataFrame | None:
-        """Current visible snapshot of a table (MOR merge of base+deltas)."""
+        """Current visible snapshot of a table (MOR merge of base+deltas):
+        every row of an append table; a keyed table's rows whose ``_seq``
+        is their key's live ``_seq``."""
         manifest = self.read_manifest()
-        if manifest is None or table not in manifest.tables:
+        if manifest is None or table not in manifest.schemas:
             return None
-        live = None if table in APPEND_TABLES else self._live_marks(manifest)
-        rows = self._visible(manifest, table, live)
-        return None if rows is None else rows.drop(SEQ)
+        env = self._envelope(manifest)
+        rows = env.filter(F.col("record_type") == table) \
+            .select(f"{table}.*", SEQ)
+        if table in KEYED_TABLES:
+            rows = rows.join(self._live(env).withColumnRenamed("_live_seq", SEQ),
+                             on=[*KEY, SEQ], how="leftsemi")
+        return rows.drop(SEQ)
 
     # --- schema evolution ----------------------------------------------------
 
     @staticmethod
-    def _check_schema(prev_schema_json: str | None, new_schema) -> None:
-        """Additive-only evolution: reject type changes for same-named
-        columns (new columns are fine — reads use the merged manifest
-        schema, so old rows read them as null)."""
+    def _merged_schema_json(prev_schema_json: str | None, new_schema) -> str:
+        """Additive-only evolution: ``new_schema``'s new columns appended
+        to the recorded schema (reads use the merged schema, so old rows
+        read them as null); a type change of a same-named column raises."""
         if not prev_schema_json:
-            return
+            return new_schema.json()
         prev = StructType.fromJson(json.loads(prev_schema_json))
         prev_types = {f.name: f.dataType.simpleString() for f in prev.fields}
         for f in new_schema.fields:
@@ -260,16 +241,8 @@ class SnapshotParquetSink:
                 raise ValueError(
                     f"unsafe schema evolution on '{f.name}': {old} → "
                     f"{f.dataType.simpleString()}")
-
-    @staticmethod
-    def _merged_schema_json(prev_schema_json: str | None, new_schema) -> str:
-        if not prev_schema_json:
-            return new_schema.json()
-        prev = StructType.fromJson(json.loads(prev_schema_json))
-        names = {f.name for f in prev.fields}
-        merged = StructType(list(prev.fields) +
-                            [f for f in new_schema.fields if f.name not in names])
-        return merged.json()
+        return StructType(list(prev.fields) + [
+            f for f in new_schema.fields if f.name not in prev_types]).json()
 
     # --- commit --------------------------------------------------------------
 
@@ -278,50 +251,37 @@ class SnapshotParquetSink:
         batch_id: int,
         offset_lo: int,
         offset_hi: int,
-        tables: dict[str, EnvelopedDir],
+        dir: str,
+        schemas: dict[str, StructType],
         stats: dict | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
     ) -> Manifest:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
-        ``tables[t]`` is table ``t``'s delta, an EnvelopedDir; a table
-        with no entry gets no delta.  Rows of a keyed table replace ALL
-        existing rows for their key (visibility via the snapshot journal:
-        the snapshot delta must hold one row or tombstone per key the batch
-        touched); rows of an append table add to it.  A commit writes only
-        its manifest and CURRENT; the commit that brings the delta depth to
-        ``compact_every`` first folds the sink into one base (``_fold``).
+        ``dir`` is the batch's delta: an envelope-shaped data dir ALREADY ON
+        DISK (relative to ``<root>/data``, e.g. ``batch_dir(batch_id)``),
+        appended to the log as it is (zero-copy).  ``schemas`` maps each
+        table the dir may hold rows of to its row schema, known statically;
+        each is merged into the manifest's, so commit-time schema checks and
+        reads need no footers.  Rows of a keyed table replace ALL existing
+        rows for their key (visibility via the snapshot journal: the dir
+        must hold one snapshot row or tombstone per key the batch touched);
+        rows of an append table add to it.  A commit writes only its
+        manifest and CURRENT; the commit that brings the delta depth to
+        ``compact_every`` first folds the log into one base (``_fold``).
         """
         prev = self.read_manifest()
-        snapshot_id = batch_id
-
-        new_tables: dict[str, list] = {}
-        new_schemas: dict[str, str] = {}
-
-        # Each table's delta is registered as it is (zero-copy).
-        for table in ALL_TABLES:
-            prev_dirs = list(prev.tables.get(table, [])) if prev else []
-            prev_schema = prev.schemas.get(table) if prev else None
-            new_tables[table] = prev_dirs
-            if prev_schema:
-                new_schemas[table] = prev_schema
-            delta = tables.get(table)
-            if delta is None:
-                continue
-            schema = StructType(delta.schema.fields
-                                + [StructField(SEQ, LongType(), False)])
-            self._check_schema(prev_schema, schema)
-            new_tables[table] = prev_dirs + [delta.dir]
-            new_schemas[table] = self._merged_schema_json(prev_schema, schema)
-
+        merged = dict(prev.schemas) if prev else {}
+        for table, schema in schemas.items():
+            merged[table] = self._merged_schema_json(merged.get(table), schema)
         manifest = Manifest(
-            snapshot_id=snapshot_id,
+            snapshot_id=batch_id,
             batch_id=batch_id,
             offset_lo=offset_lo,
             offset_hi=offset_hi,
-            tables=new_tables,
-            schemas=new_schemas,
+            dirs=(prev.dirs if prev else []) + [dir],
+            schemas=merged,
             stats=stats or {},
             delta_depth=prev.delta_depth + 1 if prev else 1,
             # non-streaming commits carry the watermark forward so a stream
@@ -337,48 +297,34 @@ class SnapshotParquetSink:
         return manifest
 
     def _fold(self, manifest: Manifest) -> Manifest:
-        """``manifest`` folded in ONE write: every table's visible rows
-        (append tables: all of them), projected back into envelope shape
-        and clustered on ``bucket_expr`` (``lineage``, which has no key, in
-        one constant bucket), as the envelope base that becomes each
-        table's single entry.
+        """``manifest``'s log folded in ONE scan and ONE write, by the
+        reads' visibility rule: the visible keyed rows and every append
+        row, still in envelope shape (tombstones dropped), clustered on
+        ``bucket_expr`` (``lineage``, which has no key, in bucket 0), as
+        the envelope base that becomes the manifest's one dir.
 
         The output goes to a ``base-<id>`` dir: the fold reads this
-        commit's own ``batch-<id>`` delta.  The visible snapshot table IS
-        the live marks, persisted once for the snapshot rows and the keyed
-        tables' visibility joins.
+        commit's own ``batch-<id>`` delta.
         """
         base = f"_envelope/base-{manifest.snapshot_id}"
-        live = self._live_marks(manifest)
-        if live is not None:
-            live = live.persist()
-        try:
-            rows = {t: self._visible(manifest, t,
-                                     None if t in APPEND_TABLES else live)
-                    for t in ALL_TABLES if manifest.tables.get(t)}
-            types = {t: r.drop(SEQ).schema for t, r in rows.items()}
-            if rows:
-                # each table's rows back in envelope shape (its own struct,
-                # the others null), bucketed while repo, path are top-level
-                envelope = functools.reduce(DataFrame.union, [
-                    r.select(F.lit(t).alias("record_type"), *[
-                        (F.struct(*types[u].fieldNames()) if u == t
-                         else F.lit(None).cast(types[u])).alias(u)
-                        for u in types], SEQ,
-                        (F.lit(0) if t == "lineage"
-                         else bucket_expr(self.n_buckets)).alias("_bucket"))
-                    for t, r in rows.items()])
-                # folds cover the FULL live key set: a fixed small partition
-                # count would write quarter-billion-row tasks at 10^9 keys
-                envelope.repartition(min(self.n_buckets, 32), "_bucket") \
-                    .drop("_bucket") \
-                    .write.mode("overwrite").parquet(self.data_path(base))
-        finally:
-            if live is not None:
-                live.unpersist()
-        return dataclasses.replace(
-            manifest, tables={**manifest.tables, **{t: [base] for t in rows}},
-            delta_depth=0)
+        env = self._envelope(manifest)
+        rt = F.col("record_type")
+        # a row's key, from whichever table's struct it holds
+        structs = [t for t in manifest.schemas if t != "lineage"]
+        (
+            env.select("*", *[F.coalesce(*[F.col(f"{t}.{k}") for t in structs])
+                              .alias(k) for k in KEY])
+            .join(self._live(env), on=KEY, how="left")
+            .filter(rt.isin(*APPEND_TABLES) | (F.col(SEQ) == F.col("_live_seq")))
+            .withColumn("_bucket", F.when(rt == "lineage", 0)
+                        .otherwise(bucket_expr(self.n_buckets)))
+            # folds cover the FULL live key set: a fixed small partition
+            # count would write quarter-billion-row tasks at 10^9 keys
+            .repartition(min(self.n_buckets, 32), "_bucket")
+            .select(*env.columns)
+            .write.mode("overwrite").parquet(self.data_path(base))
+        )
+        return dataclasses.replace(manifest, dirs=[base], delta_depth=0)
 
     def manifests_df(self) -> DataFrame:
         """The commit-manifest journal as a DataFrame (control-table view:
@@ -432,9 +378,9 @@ class SnapshotParquetSink:
 
     def vacuum(self, quiesced: bool = False) -> int:
         """Remove the data dirs ``<root>/data/<group>/<dir>`` (in practice
-        ``_envelope/batch-N`` and ``_envelope/base-N``) that the current
-        manifest does not name (orphans from crashed commits or superseded
-        snapshots).
+        ``_envelope/batch-N`` and ``_envelope/base-N``) that are not in the
+        current manifest's ``dirs`` (orphans from crashed commits or
+        superseded snapshots).
 
         Dirs whose commit id EXCEEDS the current snapshot id are in-flight —
         an active replay/stream writes ``_envelope/batch-N`` BEFORE
@@ -446,8 +392,7 @@ class SnapshotParquetSink:
         manifest = self.read_manifest()
         current = (float("inf") if quiesced
                    else (manifest.snapshot_id if manifest else 0))
-        live = {d for dirs in manifest.tables.values() for d in dirs} \
-            if manifest else set()
+        live = set(manifest.dirs) if manifest else set()
         removed = 0
         for table in os.listdir(self.data_path("")):
             for snap in os.listdir(self.data_path(table)):

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import make_change_events, make_eml, expected_final_state
-from emailcdc.sink import ALL_TABLES, EnvelopedDir, SnapshotParquetSink
+from emailcdc.sink import ALL_TABLES, SnapshotParquetSink
+from emailcdc.udfs import TOMBSTONE
 
 
 EVENTS = make_change_events(30)
@@ -115,8 +116,10 @@ class TestReplay:
             eng.apply_batch(batch.coalesce(1), batch_id=1, offset_lo=0, offset_hi=0)
             # the snapshot journal (rows and tombstones) holds one U row
             manifest = eng.sink.read_manifest()
-            journal = eng.sink._read_dirs(manifest, "snapshot",
-                                          tombstones=True)
+            rt = F.col("record_type")
+            journal = eng.sink._envelope(manifest) \
+                .filter(rt.isin("snapshot", TOMBSTONE)) \
+                .select("snapshot.commit", (rt == TOMBSTONE).alias(TOMBSTONE))
             seen.append([(r["commit"], r["_delete"]) for r in journal.collect()])
             assert [r["commit"] for r in eng.table("snapshot").collect()] == ["c0"]
         assert seen[0] == seen[1] == [("c0", False)]
@@ -278,14 +281,14 @@ class TestReplay:
 def _snapshot_envelope(spark, sink, batch_id, rows, ddl):
     """An envelope-shaped snapshot delta, as the engine writes one:
     record_type 'snapshot', the rows in struct ``snapshot``, a top-level
-    ``_seq``."""
+    ``_seq``; returned as ``commit``'s dir and schemas arguments."""
     df = spark.createDataFrame(rows, ddl)
     d = sink.batch_dir(batch_id)
     df.select(F.lit("snapshot").alias("record_type"),
               F.struct(*df.columns).alias("snapshot"),
               F.lit(batch_id).cast("long").alias("_seq")) \
         .write.parquet(sink.data_path(d))
-    return EnvelopedDir(d, df.schema)
+    return d, {"snapshot": df.schema}
 
 
 class TestSchemaEvolution:
@@ -296,13 +299,13 @@ class TestSchemaEvolution:
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long",
         )
-        sink.commit(1, 0, 0, {"snapshot": base})
+        sink.commit(1, 0, 0, *base)
         evolved = _snapshot_envelope(
             spark, sink, 2, [("r1", "p2", "c", "txt", "sha2", 1, "new")],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long, extra_col string",
         )
-        sink.commit(2, 1, 1, {"snapshot": evolved})
+        sink.commit(2, 1, 1, *evolved)
         df = sink.read_table("snapshot")
         assert "extra_col" in df.columns
         rows = {r["path"]: r for r in df.collect()}
@@ -313,11 +316,11 @@ class TestSchemaEvolution:
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
         base = _snapshot_envelope(spark, sink, 1, [("r1", "p1", 1)],
                                   "repo string, path string, v long")
-        sink.commit(1, 0, 0, {"snapshot": base})
+        sink.commit(1, 0, 0, *base)
         bad = _snapshot_envelope(spark, sink, 2, [("r1", "p1", "oops")],
                                  "repo string, path string, v string")
         with pytest.raises(Exception, match="unsafe schema evolution"):
-            sink.commit(2, 1, 1, {"snapshot": bad})
+            sink.commit(2, 1, 1, *bad)
 
 
 class TestSkew:
@@ -436,6 +439,37 @@ class TestVacuumAndCrash:
         eng.sink.vacuum()
         assert os.path.isdir(inflight)
 
+    def test_publish_fsyncs_each_replaced_dir(self, spark, tmp_path,
+                                              monkeypatch):
+        """Each ``os.replace`` of a commit (the manifest, then CURRENT) is
+        followed by an fsync of the directory it renamed in, so the flip
+        itself is durable, not only the files' bytes."""
+        import os
+        import stat
+        sink = SnapshotParquetSink(spark, str(tmp_path / "sink"))
+        calls, replace, fsync = [], os.replace, os.fsync
+
+        def spy_replace(src, dst):
+            replace(src, dst)
+            calls.append(("replace", os.path.dirname(dst)))
+
+        def spy_fsync(fd):
+            st = os.fstat(fd)
+            calls.append(("fsync", (st.st_dev, st.st_ino)
+                          if stat.S_ISDIR(st.st_mode) else None))
+            fsync(fd)
+
+        monkeypatch.setattr(os, "replace", spy_replace)
+        monkeypatch.setattr(os, "fsync", spy_fsync)
+        sink.commit(1, 0, 0, sink.batch_dir(1), {})
+        monkeypatch.undo()
+        replaced = [i for i, c in enumerate(calls) if c[0] == "replace"]
+        assert [calls[i][1] for i in replaced] == [
+            os.path.join(sink.root, "manifests"), sink.root]
+        for i in replaced:
+            st = os.stat(calls[i][1])
+            assert calls[i + 1:i + 2] == [("fsync", (st.st_dev, st.st_ino))]
+
 
 class TestBroadcastGuard:
     """VERDICT r1: past spark.sql.autoBroadcastJoinThreshold the LWW
@@ -514,8 +548,7 @@ class TestEnvelopeDeltas:
         eng = _engine(spark, str(tmp_path / "sink"))
         eng.replay(_events_df(spark), batch_size=10_000)  # single delta, no fold
         manifest = eng.sink.read_manifest()
-        entries = manifest.tables["messages"]
-        assert entries == ["_envelope/batch-1"]
+        assert manifest.dirs == ["_envelope/batch-1"]
         msgs = eng.table("messages")
         assert msgs.count() > 0
         assert "_seq" not in msgs.columns
@@ -546,8 +579,7 @@ class TestEnvelopeDeltas:
         assert len(added) == 3 and not any(added), added
         assert os.listdir(data) == ["_envelope"]
         manifest = eng.sink.read_manifest()
-        assert manifest.tables["lineage"] == [
-            f"_envelope/batch-{i}" for i in (1, 2, 3)]
+        assert manifest.dirs == [f"_envelope/batch-{i}" for i in (1, 2, 3)]
 
 
 class TestReadFrames:
@@ -562,8 +594,7 @@ class TestReadFrames:
         manifest = sink.read_manifest()
         # one fold (batch 2), then one envelope delta on top of the bases
         assert manifest.delta_depth == 1
-        assert manifest.tables["messages"][0] == "_envelope/base-2"
-        assert manifest.tables["messages"][1:] == ["_envelope/batch-3"]
+        assert manifest.dirs == ["_envelope/base-2", "_envelope/batch-3"]
 
         sc, group = spark.sparkContext, "test-read-frame-builds"
         sc.setJobGroup(group, "build read_table frames")
@@ -575,7 +606,7 @@ class TestReadFrames:
             assert sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        # every table with registered dirs got a frame
+        # every table with a schema got a frame
         built = {t for t in ALL_TABLES if frames[t] is not None}
-        assert built == {t for t in ALL_TABLES if manifest.tables[t]}
+        assert built == set(manifest.schemas)
         assert {"snapshot", "messages", "lineage"} <= built

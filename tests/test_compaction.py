@@ -6,6 +6,7 @@ import shutil
 
 import pytest
 from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
 
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
@@ -35,7 +36,7 @@ class TestCompaction:
         # fold actually happened: delta depth reset and dir lists collapsed
         manifest = sink.read_manifest()
         assert manifest.delta_depth < 2
-        assert len(manifest.tables["snapshot"]) <= 2
+        assert len(manifest.dirs) <= 2
 
     def test_messages_replaced_across_fold(self, spark, sink_dir):
         from emailcdc.fixtures import make_eml
@@ -84,6 +85,30 @@ class TestCompaction:
         rows = _snap(eng)
         assert set(rows) == {("r2", "q.txt")}
 
+    def test_folding_commit_runs_four_jobs(self, spark, sink_dir,
+                                           monkeypatch):
+        """The fold reads the log in one scan: the journal's aggregate,
+        its broadcast, the bucket shuffle and the write are its only
+        jobs."""
+        sink = SnapshotParquetSink(spark, sink_dir, n_buckets=8,
+                                   compact_every=2)
+        sc, group, commit = spark.sparkContext, "test-folding-commit", \
+            sink.commit
+
+        def grouped(*args, **kwargs):
+            sc.setJobGroup(group, "sink commit")
+            try:
+                return commit(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        monkeypatch.setattr(sink, "commit", grouped)
+        CdcEngine(spark, sink).replay(
+            spark.createDataFrame(EVENTS, schema=schemas.CHANGE_EVENTS),
+            batch_size=15, max_batches=2)
+        assert sink.read_manifest().delta_depth == 0  # batch 2 folded
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
 
 def _fold_log(batch_size):
     """A generated log (inserts, updates, deletes) plus a tail whose last
@@ -124,17 +149,17 @@ def _tables(sink):
 
 
 def _assert_folded_marks(sink):
-    """A fold leaves every table, the snapshot journal included, as one
-    entry, the one envelope base all six share: one snapshot row per key,
-    and every row live (no tombstone or deleted key survives)."""
+    """A fold leaves the log as one entry, the one envelope base all six
+    tables, the snapshot journal included, share: one snapshot row per
+    key, and every row live (no tombstone or deleted key survives)."""
     manifest = sink.read_manifest()
     assert manifest.delta_depth == 0
-    assert len(manifest.tables["snapshot"]) == 1
-    assert {t: len(e) for t, e in manifest.tables.items()} == \
-        dict.fromkeys(ALL_TABLES, 1)
-    assert manifest.tables == dict.fromkeys(
-        ALL_TABLES, [f"_envelope/base-{manifest.snapshot_id}"])
-    base = sink._read_dirs(manifest, "snapshot", tombstones=True)
+    assert manifest.dirs == [f"_envelope/base-{manifest.snapshot_id}"]
+    assert set(manifest.schemas) == set(ALL_TABLES)
+    rt = F.col("record_type")
+    base = sink._envelope(manifest).filter(rt.isin("snapshot", TOMBSTONE)) \
+        .select("snapshot.repo", "snapshot.path",
+                (rt == TOMBSTONE).alias(TOMBSTONE))
     assert base.count() == base.select("repo", "path").distinct().count()
     assert base.count() == sink.read_table("snapshot").count()
     assert base.filter(TOMBSTONE).count() == 0
@@ -266,8 +291,7 @@ class TestCopiedSink:
         manifest = sink.read_manifest()
         assert os.path.isdir(os.path.join(
             copy, "data", "_envelope", f"base-{manifest.snapshot_id}"))
-        for dirs in manifest.tables.values():
-            for d in dirs:
-                assert os.path.isdir(os.path.join(copy, "data", d)), d
+        for d in manifest.dirs:
+            assert os.path.isdir(os.path.join(copy, "data", d)), d
         shutil.rmtree(original)
         assert _tables(sink) == uninterrupted[1]

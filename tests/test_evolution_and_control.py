@@ -7,7 +7,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from emailcdc import schemas
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
-from emailcdc.sink import EnvelopedDir, SnapshotParquetSink
+from emailcdc.sink import SnapshotParquetSink
 
 EVENTS = make_change_events(24)
 EXPECTED = expected_final_state(EVENTS)
@@ -23,20 +23,21 @@ class _EngineV2(CdcEngine):
         orig_commit = self.sink.commit
 
         def commit_with_extra(**kw):
-            # the stock engine ships snapshot rows and tombstones zero-copy
-            # inside the envelope (EnvelopedDir); a v2 writes its own
-            # envelope dir whose snapshot struct gains a column
-            snap = kw["tables"]["snapshot"]
+            # the stock engine commits its envelope dir as it is; a v2
+            # rewrites the whole envelope into its own dir, whose snapshot
+            # struct gains a column, and commits that as the batch's dir
             v2_dir = f"_envelope/v2-{batch_id}"
-            self.spark.read.parquet(self.sink.data_path(snap.dir)).withColumn(
+            self.spark.read.parquet(self.sink.data_path(kw["dir"])).withColumn(
                 "snapshot", F.col("snapshot").withField(
                     "content_length", F.lit(batch_id * 1000).cast("long"))
             ).write.parquet(self.sink.data_path(v2_dir))
-            # a fresh StructType: StructType.add would mutate schemas.SNAPSHOT
+            # fresh objects: StructType.add would mutate schemas.SNAPSHOT,
+            # and kw["schemas"] is the engine's own table map
             v2_schema = StructType(
-                list(snap.schema.fields)
+                list(kw["schemas"]["snapshot"].fields)
                 + [StructField("content_length", LongType())])
-            kw["tables"]["snapshot"] = EnvelopedDir(v2_dir, v2_schema)
+            kw["dir"] = v2_dir
+            kw["schemas"] = {**kw["schemas"], "snapshot": v2_schema}
             return orig_commit(**kw)
 
         self.sink.commit = commit_with_extra
@@ -59,7 +60,8 @@ class TestEngineSchemaEvolution:
         # the snapshot delta holds only snapshot rows — no envelope row of
         # another table leaks in as a null-key row
         manifest = sink.read_manifest()
-        deltas = sink._read_dirs(manifest, "snapshot")
+        deltas = sink._envelope(manifest) \
+            .filter(F.col("record_type") == "snapshot").select("snapshot.*")
         assert deltas.filter(F.col("repo").isNull()).count() == 0
         snap = v2.table("snapshot")
         assert "content_length" in snap.columns
