@@ -21,10 +21,10 @@ orphan files; the batch reruns deterministically).
 
 Skew handling (north rule): hot repos are detected per batch by a
 ``(repo)`` grouping set of the one pre-extraction aggregate (no job of
-its own); events of hot repos get a salt derived from ``offset`` so one
-giant repo spreads over ``SALTS`` partitions during the (CPU-heavy) parse
-stage, then the salt is dropped — the MERGE stays key-correct because
-bucketing is on (repo, path).
+its own); the parse input is repartitioned by ``repo`` salted with
+``path`` for hot repos only, so one giant repo spreads over every
+partition during the (CPU-heavy) parse stage while a cold repo stays in
+one — the MERGE stays key-correct because bucketing is on (repo, path).
 
 At 10^10-event scale nothing here is driver-bound: one grouping-sets
 aggregate over the raw batch's content-free columns yields the LWW
@@ -53,8 +53,7 @@ KEY = ["repo", "path"]
 # every table's row schema: the extraction envelope's five, then lineage
 TABLES = {**ENVELOPE_TABLES, "lineage": schemas.LINEAGE}
 # hot-repo salting: a repo holding more than max(HOT_REPO_MIN_EVENTS,
-# HOT_REPO_FRACTION × batch events) events is spread over SALTS partitions
-SALTS = 8
+# HOT_REPO_FRACTION × batch events) events is spread over all partitions
 HOT_REPO_FRACTION = 0.2
 HOT_REPO_MIN_EVENTS = 64
 
@@ -207,22 +206,18 @@ class CdcEngine:
             winners = batch.join(win_meta, on=[*KEY, "offset", "op"],
                                  how="leftsemi")
 
-            # --- skew: hot repos get an offset-derived salt for the parse ------
+            # --- skew: hot repos are salted by path for the parse ------------
             # Parse-stage partitioning: the no-shuffle path inherits the
             # scan partitioning (session sets files.maxPartitionBytes low
             # enough for full parallelism — python parse cost per byte is
-            # ~10× scan cost per byte).  Hot repos get an offset-derived
-            # salt and an explicit repartition so one giant repo spreads
-            # over SALTS partitions (north rule's skew contract).
+            # ~10× scan cost per byte).  With hot repos, one repartition by
+            # repo plus path-for-hot-repos-only (null for the rest) spreads
+            # a giant repo over every partition (north rule's skew
+            # contract) and keeps each cold repo together.
             if hot_repos:
-                salted = winners.withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("repo").isin(hot_repos),
-                        F.pmod(F.xxhash64("path", "offset"), F.lit(SALTS)),
-                    ).otherwise(F.lit(0)),
-                ).repartition(self.spark.sparkContext.defaultParallelism,
-                              "repo", "_salt").drop("_salt")
+                salted = winners.repartition(
+                    self.spark.sparkContext.defaultParallelism, "repo",
+                    F.when(F.col("repo").isin(hot_repos), F.col("path")))
             else:
                 salted = winners
 

@@ -376,7 +376,8 @@ class TestSkew:
     def test_hot_repo_detection_runs_no_job(self, spark, tmp_path):
         """Hot-repo detection rides the batch aggregate: a 400-event batch
         over 10 repos (none hot) runs as many Spark jobs as a 40-event
-        one, counted as new ungrouped job ids around apply_batch."""
+        one, counted as new ungrouped job ids around apply_batch, and a
+        delta batch stays within its budget of 5 jobs."""
         tracker = spark.sparkContext.statusTracker()
         jobs = {}
         for n in (40, 400):
@@ -392,6 +393,7 @@ class TestSkew:
             batch.unpersist()
             assert res.event_count == n and res.hot_repos == ()
         assert jobs[400] == jobs[40], jobs
+        assert jobs[40] <= 5, jobs
 
 
 class TestVacuumAndCrash:

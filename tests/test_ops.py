@@ -425,6 +425,13 @@ class TestLshBucketCaps:
             clones, "text", "doc_id", n_hashes=16, bands=4, max_bucket=None)
         assert uncapped.count() == 60 * 59 // 2
 
+    def test_none_means_module_cap(self, spark, clones, monkeypatch):
+        monkeypatch.setattr(dedup, "MAX_BUCKET_CAP", 5)
+        pairs = dedup.minhash_lsh_candidates(
+            clones.limit(20), "text", "doc_id", n_hashes=16, bands=4,
+            max_bucket=None)
+        assert pairs.count() == 0
+
 
 class TestIvfRecall:
     """Recall grows monotonically with n_probe and reaches 1.0 at full
